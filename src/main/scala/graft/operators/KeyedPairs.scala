@@ -111,10 +111,9 @@ object KeyedPairs {
     // inside the action and Spark's broadcast limits are its loud
     // guard (a corpus with millions of over-cap keys fails with the
     // broadcast-size error, naming this join). Two rejected
-    // alternatives, same-JVM A/Bs in OPTIMIZATION_r19.md: a window
-    // count (sorts the whole input by key and serializes each hot
-    // bucket through one task — q63 1.1 → 1.9 s) and lazily
-    // broadcasting the old THREE-pass routing (strictly slower still).
+    // alternatives: a window count (sorts the whole input by key and
+    // serializes each hot bucket through one task) and lazily
+    // broadcasting the old THREE-pass routing (one more input pass).
     val agged = rows.groupBy(k: _*)
       .agg(org.apache.spark.sql.graftfns.BoundedCollect
         .boundedCollect(col(P), cap).as(FC))

@@ -12,7 +12,10 @@ import org.apache.spark.sql.types.LongType
   * one partition, which is a non-starter at 100 TB. Instead:
   *
   *  1. range-partition + sort-within-partitions by the sort key
-  *     (parallel, one shuffle),
+  *     (parallel, one shuffle). With no `numPartitions` the partition
+  *     count is left to Spark, so AQE may merge ADJACENT range
+  *     partitions into right-sized ones (ranges stay ordered, so the
+  *     numbering is unchanged); `Some(n)` pins exactly `n`,
   *  2. pin ONE physical plan by materialising the RDD — the range
   *     bounds are sampled exactly once and the shuffle output is
   *     reused by every subsequent job on this RDD (re-planning a
@@ -30,12 +33,15 @@ object Seqno {
   def globalSeqno(df: DataFrame, sortCols: Seq[Column], out: String = "seqno",
                   numPartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
-    val n = numPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val sorted = df.repartitionByRange(n, sortCols: _*).sortWithinPartitions(sortCols: _*)
+    val ranged = numPartitions match {
+      case Some(n) => df.repartitionByRange(n, sortCols: _*)
+      case None => df.repartitionByRange(sortCols: _*)
+    }
+    val sorted = ranged.sortWithinPartitions(sortCols: _*)
     val schema = sorted.schema.add(out, LongType, nullable = false)
     // .rdd fixes the physical plan (and therefore the sampled range
-    // bounds) once; zipWithIndex's count job and the main job both read
-    // the same shuffle output.
+    // bounds and AQE's coalesced partition specs) once; zipWithIndex's
+    // count job and the main job both read the same shuffle output.
     val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ i)
     }

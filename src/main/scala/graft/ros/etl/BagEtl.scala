@@ -12,11 +12,15 @@ import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
   * and write `Messages`, `Connections` and one flattened parquet table
   * per datatype (snappy, like TableBuffer.cpp:49-51).
   *
-  * Scale shape: the bag scan parallelizes per chunk; seqno is the
-  * prefix-sum operator (no single-partition stage); each per-type table
-  * is a filter + mapPartitions decode of only that type's rows (the
+  * Scale shape: the bag scan parallelizes over packed chunk ranges;
+  * seqno is the range-partition + prefix-sum operator (no
+  * single-partition stage; AQE right-sizes its partitions); each
+  * per-type table is a typed scan decoding only that type's rows (the
   * reference's route-by-type, FlattenedRosWriter.cpp:273-289, becomes
-  * predicate pushdown into the source); Connections is driver-side tiny.
+  * predicate pushdown into the source), written with as many tasks as
+  * its own bytes need but never so few that a task walks more chunk
+  * bytes than one Spark file split. Messages writes concurrently with
+  * the per-type tables; Connections is driver-side tiny and lands last.
   */
 object BagEtl {
   /** The reference's `info` result (rosbag2parquet.h:6-10) plus the
@@ -70,10 +74,10 @@ object BagEtl {
     *        bz2/lz4 bags, decompressed — exactly ONCE for the whole
     *        ETL: the reference's serial read-once economics
     *        (rosbag2parquet.cpp:41-63) at cluster parallelism. Costs
-    *        one extra write of the payload bytes, so it wins when the
-    *        bag has many datatypes or compressed chunks; the default
-    *        per-type re-scan wins for small uncompressed bags with
-    *        one or two types.
+    *        one extra write and read of the payload bytes, so it pays
+    *        only where decompression is dear: it measured faster on a
+    *        bz2 bag (PERF.md), but SLOWER than the default per-type
+    *        re-scans on a 6-type lz4 fleet (lz4 decompresses at GB/s).
     */
   /** @param nativeTimestamp additionally emit `time` as a parquet
     *        TIMESTAMP (micros, NTZ) derived from time_sec/time_nsec
@@ -678,15 +682,29 @@ object BagEtl {
       col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
     // staging dirs are scratch: Overwrite, so a hard crash that never
     // reached the cleanup cannot fail the redo with "path exists"
-    if (stagedByType)
-      raw.select(metaCols :+ col("datatype") :+ col("data"): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy("datatype")
-        .option("compression", "snappy").parquet(stageDir)
-    else
-      raw.select(metaCols: _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "snappy").parquet(stageDir)
+    val staged =
+      if (stagedByType) raw.select(metaCols :+ col("datatype") :+ col("data"): _*)
+      else raw.select(metaCols: _*)
+    val stageWriter = staged.write.mode(SaveMode.Overwrite)
+    (if (stagedByType) stageWriter.partitionBy("datatype") else stageWriter)
+      .option("compression", "snappy").parquet(stageDir)
     lap("spine-stage-write")
+    // internal read-backs pass the schema this run wrote: without it
+    // every read of a staging dir launches a footer-inference job
+    val stageRead = spark.read.schema(staged.schema).parquet(stageDir)
+
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // Exact payload bytes per (bag, connection) — one aggregate over
+    // the staged meta (kilobytes; no bag re-scan), run beside the seqno
+    // shuffle below. It sizes each per-type write by the bytes that
+    // type actually writes.
+    val connBytesF = Future { scala.concurrent.blocking {
+      stageRead.groupBy(col("bag_path"), col("connection_id"))
+        .agg(sum(col("size").cast("long")))
+        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    } }
 
     // Global seqno in merge-time order with storage-order tie-break —
     // rosbag::View semantics (reference rosbag2parquet.cpp:45-52;
@@ -696,7 +714,7 @@ object BagEtl {
     // bag, deterministic (name-sorted) interleave across equal-time
     // rows from different bags.
     val spine0 = Seqno.globalSeqno(
-      spark.read.parquet(stageDir).select(metaCols: _*),
+      stageRead.select(metaCols: _*),
       Seq(col("time_sec"), col("time_nsec"), col("bag_path"), col("chunk_idx"), col("offset")))
     // incremental appends continue the dense seqno after the existing
     // table's maximum
@@ -732,35 +750,71 @@ object BagEtl {
     // dispatch (FlattenedRosWriter.cpp:273-289) is the datatype option
     // pushed into the source.
     val seqnoDir = s"$out/_seqno"
-    spine.select(col("bag_path"), col("chunk_idx"), col("offset"), col("seqno"))
-      .write.mode(SaveMode.Overwrite)
+    val seqnoCols = spine.select(col("bag_path"), col("chunk_idx"), col("offset"), col("seqno"))
+    seqnoCols.write.mode(SaveMode.Overwrite)
       .option("compression", "snappy").parquet(seqnoDir)
     lap("seqno-map-write")
-    val seqnoMap = spark.read.parquet(seqnoDir)
+    val seqnoMap = spark.read.schema(seqnoCols.schema).parquet(seqnoDir)
+    val connBytes = Await.result(connBytesF, Duration.Inf)
+    val (writeBudget, _) = graft.ros.PartitionPacking.budgetBytes(connBytes.values.sum)
+    val maxSplitBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / math.max(1L, b)
 
     // one table per DATATYPE (two same-type connections may carry
     // textually different but md5-equal definition strings). The
-    // per-type jobs are independent (distinct output dirs, shared
-    // read-only seqno map), so they run CONCURRENTLY: Spark's scheduler
-    // interleaves their stages, overlapping one job's write/commit
-    // stalls with another's scan — on a cluster this keeps executors
-    // busy across the per-type tail. DDL is collected per type and
-    // appended in the original datatype order for deterministic output.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // one job group for all per-type jobs: on any failure the siblings
-    // are cancelled instead of racing caller teardown (job groups are
-    // thread-local, so each future sets it)
+    // per-type writes and Messages are independent (distinct output
+    // dirs, shared read-only staging), so they run CONCURRENTLY:
+    // Spark's scheduler interleaves their stages, overlapping one
+    // job's write/commit stalls with another's scan — on a cluster
+    // this keeps executors busy across the per-type tail. DDL is
+    // collected per type and appended in the original datatype order
+    // for deterministic output.
+    // one job group for all concurrent writes: on any failure the
+    // siblings are cancelled instead of racing caller teardown (job
+    // groups are thread-local, so each future sets it)
     val jobGroup = s"graft-etl-${java.util.UUID.randomUUID()}"
-    val typeDdl = typeGroups.map { case (datatype, md5, groupMsgDef, groupBags, tableName) =>
+    def inGroup[T](desc: String, label: String)(body: => T): Future[T] =
       Future { scala.concurrent.blocking {   // blocking{}: Spark actions
         // park threads — without it the global EC caps concurrency at
         // CPU count and starves other users of the pool
-        spark.sparkContext.setJobGroup(jobGroup, s"per-type $tableName",
-          interruptOnCancel = true)
+        spark.sparkContext.setJobGroup(jobGroup, desc, interruptOnCancel = true)
         try {
-        val tTable = System.nanoTime()
+          val t0 = System.nanoTime()
+          val r = body
+          // timed locally: under concurrency the shared lap() deltas
+          // would time the whole phase
+          if (timing) System.err.println(
+            f"[etl-timing] $label%-22s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
+          r
+        // pooled EC thread: clear the thread-local group so later Spark
+        // work on this thread isn't attributed to a dead ETL group with
+        // interruptOnCancel it never asked for
+        } finally spark.sparkContext.clearJobGroup()
+      } }
+    val messagesWrite = inGroup("Messages", "messages-write") {
+      messages.write.mode(writeMode)
+        .option("compression", "snappy").parquet(s"$out/Messages.parquet")
+    }
+    val typeDdl = typeGroups.map { case (datatype, md5, groupMsgDef, groupBags, tableName) =>
+      // Write partitions sized by the bytes this table writes (exact,
+      // from the staged sizes) against the run's per-core budget — the
+      // reference cuts each table's row groups at a byte target too
+      // (TableBuffer.cpp:149-174). Floor: no task walks more chunk
+      // bytes than one Spark file split, so sparse types and slow
+      // codecs keep their scan parallelism (at roughly parallelism x
+      // maxPartitionBytes and above, this IS the scan's own packing).
+      // coalesce merges only ADJACENT scan partitions and never
+      // exceeds the count the scan planned.
+      val bagSet = groupBags.toSet
+      val inGroupBags = indexes.filter { case (b, _) => bagSet(b) }
+      val typeBytes = inGroupBags.map { case (b, index) =>
+        index.connections.filter(c => c.datatype == datatype && c.md5sum == md5)
+          .map(c => connBytes.getOrElse((b, c.connId), 0L)).sum
+      }.sum
+      val walked = inGroupBags.map(_._2.chunks.map(_.uncompressedSize.toLong).sum).sum
+      val writeParts = math.max(1L, math.max(ceilDiv(typeBytes, writeBudget),
+        ceilDiv(walked, maxSplitBytes))).min(Int.MaxValue.toLong).toInt
+      inGroup(s"per-type $tableName", s"table:$tableName") {
         val ddl = new StringBuilder
         // `joined`: the per-type frame. `rawForSide`: a lineage for the
         // side-table write that does NOT pay the payload decode. In scan
@@ -774,7 +828,7 @@ object BagEtl {
           // bags carrying THIS md5 variant (within a bag the md5 is
           // unique per datatype, so bag_path fully disambiguates).
           val bundle = MsgDefParser.parse(datatype, groupMsgDef)
-          val part = spark.read.parquet(stageDir)
+          val part = stageRead
             .filter(col("datatype") === datatype && col("bag_path").isin(groupBags: _*))
             .join(seqnoMap, Seq("bag_path", "chunk_idx", "offset"))
             .select(col("seqno"), col("connection_id"), col("bag_path"), col("data"))
@@ -810,7 +864,7 @@ object BagEtl {
                 .select(col("seqno"), col("data"))
               else sideFromJoined
             val sideNew = !append || !tableExists(s"$out/${tableName}_blobs.parquet")
-            side.write.mode(writeMode)
+            side.coalesce(writeParts).write.mode(writeMode)
               .option("compression", "snappy")
               .parquet(s"$out/${tableName}_blobs.parquet")
             if (sideNew)
@@ -820,45 +874,35 @@ object BagEtl {
         // DDL describes tables, not rows: appends to an existing table
         // must not re-emit its CREATE statement
         val tableNew = !append || !tableExists(s"$out/$tableName.parquet")
-        df.write.mode(writeMode)
+        df.coalesce(writeParts).write.mode(writeMode)
           .option("compression", "snappy").parquet(s"$out/$tableName.parquet")
         if (tableNew)
           ddl ++= VerticaDdl.createTable(tableName, df.schema) ++= "\n"
-        // per-table wall time is measured locally (the shared lap()
-        // deltas would be garbage under concurrency)
-        if (timing) System.err.println(
-          f"[etl-timing] table:$tableName%-16s ${(System.nanoTime() - tTable) / 1e9}%6.2fs")
         ddl.toString
-        // pooled EC thread: clear the thread-local group so later Spark
-        // work on this thread isn't attributed to a dead ETL group with
-        // interruptOnCancel it never asked for
-        } finally spark.sparkContext.clearJobGroup()
-    } } }
+      }
+    }
     val ddl = new StringBuilder
     try {
-      Await.result(Future.sequence(typeDdl), Duration.Inf).foreach(ddl ++= _)
-      // Connections (written last, below) is the increment's COMMIT
-      // RECORD: runIncremental derives its done-set from
-      // Connections.bag_path alone, so it must land only AFTER every
-      // other write succeeded — Messages included — and a crash mid-
-      // increment (even between the Messages and Connections writes)
-      // leaves the work unrecorded and the next increment redoes those
-      // bags. (The redo can duplicate Messages/per-type rows the
-      // crashed attempt had already appended; they carry the same
-      // (bag_path, chunk_idx-derived seqno) identity, so dropDuplicates
-      // recovers — the alternative ordering loses rows SILENTLY, which
-      // is not recoverable.) Written inside the try: the lineage reads
-      // the staging dirs the finally deletes.
-      messages.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Messages.parquet")
-      lap("messages-write")
+      Await.result(messagesWrite.zip(Future.sequence(typeDdl)), Duration.Inf)
+        ._2.foreach(ddl ++= _)
+      lap("concurrent-writes")
+      // Connections (written last, after every other write succeeded)
+      // is the increment's COMMIT RECORD: runIncremental derives its
+      // done-set from Connections.bag_path alone, so a crash anywhere
+      // before this write leaves the work unrecorded and the next
+      // increment purges the dead attempt's rows and redoes those bags
+      // (repairCrashedIncrement).
       connections.write.mode(writeMode)
         .option("compression", "snappy").parquet(s"$out/Connections.parquet")
+      lap("connections-write")
     } catch { case e: Throwable =>
       // fail fast AND stop the siblings — AndFutureJobs so siblings
       // between jobs can't keep submitting against the dirs the finally
-      // below deletes
+      // below deletes — then let every sibling unwind, so no write
+      // commits files after this run has failed (the caller's repair
+      // and redo would race it)
       spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
+      (messagesWrite +: typeDdl).foreach(f => Await.ready(f, Duration.Inf))
       throw e
     } finally {
       // drop the temp staging dirs even on failure (file:// and remote)
@@ -876,7 +920,12 @@ object BagEtl {
 
     // info from the written Messages table (columnar) — not a bag
     // re-scan; in append mode the slice covers only THIS run's bags
-    val msgs0 = spark.read.parquet(s"$out/Messages.parquet")
+    // (only the columns Info needs, by the schema this run wrote: no
+    // footer-inference job, and older appended files with a different
+    // column set still read)
+    val infoCols = StructType(Seq("bag_path", "seqno", "size", "data_crc32")
+      .map(messages.schema(_)))
+    val msgs0 = spark.read.schema(infoCols).parquet(s"$out/Messages.parquet")
     val msgs = if (append) msgs0.filter(col("bag_path").isin(bags: _*)) else msgs0
     val r = msgs
       .agg(count(lit(1)), coalesce(sum(col("size").cast("long")), lit(0L)),

@@ -51,6 +51,14 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("Window"), s"seqno fell back to a window:\n$p")
   }
 
+  test("q19: get_json_object is evaluated once — the rand()*0 barrier holds") {
+    // without the barrier Catalyst copies the expression into the
+    // pushed-down filter and evaluates it twice per row
+    val p = graft.SparkEntry.queries("q19_json")(spark, sf)
+      .queryExecution.optimizedPlan.toString
+    assert("get_json_object\\(".r.findAllIn(p).size === 1, s"q19 json evaluations:\n$p")
+  }
+
   test("q13: top-k plans as TakeOrderedAndProject, not full sort") {
     val p = plan("q13_topk")
     assert(p.contains("TakeOrderedAndProject"), s"no top-k operator:\n$p")

@@ -36,6 +36,36 @@ class EtlCommitRecordSpec extends SparkTestBase {
     ()
   }
 
+  private val strDef = "string data"
+
+  /** Two IMU readings plus two std_msgs/String messages. A `poisoned`
+    * string payload claims more bytes than it holds: the bag indexes and
+    * the spine (which never decodes payloads) read fine, and only the
+    * String table's typed decode fails.
+    */
+  private def addMixedBag(dir: java.nio.file.Path, name: String, base: Int,
+      poisoned: Boolean): Unit = {
+    val strBundle = MsgDefParser.parse("std_msgs/String", strDef)
+    val str = (i: Int) =>
+      if (!poisoned) RosSchemaMapper.encode(strBundle, Seq[Any](s"s$i"))
+      else java.nio.ByteBuffer.allocate(6).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(1 << 20).put("ab".getBytes("UTF-8")).array()
+    Files.write(dir.resolve(name), BagFormat.writeBag(
+      Seq(BagConnection(0, "/imu_data", "sensor_msgs/Imu", Fixtures.imuMd5,
+          Fixtures.imuDef, "/n"),
+        BagConnection(1, "/log", "std_msgs/String",
+          graft.ros.RosMd5.compute("std_msgs/String", strDef), strDef, "/n")),
+      (0 until 2).flatMap(i => Seq(
+        WriteMessage(0, base + i, 0, imuBytes(i.toLong, base + i, i * 0.5)),
+        WriteMessage(1, base + i, 1, str(i)))),
+      messagesPerChunk = 2, compression = "lz4"))
+    ()
+  }
+
+  private def connectionBags(out: String): Seq[String] =
+    spark.read.parquet(s"$out/Connections.parquet")
+      .select(col("bag_path")).distinct().collect().map(_.getString(0)).toSeq
+
   private def freshOut(tag: String): String = {
     val out = Files.createTempDirectory(tag).toString + "/out"
     Files.createDirectories(Paths.get(out))
@@ -194,6 +224,42 @@ class EtlCommitRecordSpec extends SparkTestBase {
     assert(!body.contains('\n'))
     // unterminated array (half-written record) is rejected, not misread
     assert(BagEtl.extractInflightBody("""{"committed":1,"inflight":["/a""").isEmpty)
+  }
+
+  test("a per-type write failing beside Messages leaves no Connections.parquet") {
+    val dir = Files.createTempDirectory("graft_cr_bootfail")
+    addMixedBag(dir, "a.bag", 1700000000, poisoned = true)
+    val out = freshOut("graft_cr_bootfail_out")
+    intercept[Exception](BagEtl.runIncremental(spark, dir.toString, out))
+    assert(!Files.exists(Paths.get(s"$out/Connections.parquet")))
+    assert(!Files.exists(Paths.get(s"$out/_spine")) && !Files.exists(Paths.get(s"$out/_seqno")),
+      "staging dirs dropped on failure")
+  }
+
+  test("a per-type write failing beside Messages commits nothing; the redo is exactly-once") {
+    val dir = Files.createTempDirectory("graft_cr_midfail")
+    addBag(dir, "a.bag", 1700000000)
+    val out = freshOut("graft_cr_midfail_out")
+    assert(BagEtl.runIncremental(spark, dir.toString, out).count == 3)
+    addMixedBag(dir, "b.bag", 1700000100, poisoned = true)
+    intercept[Exception](BagEtl.runIncremental(spark, dir.toString, out))
+    // the commit record names only a.bag; the increment is still in flight
+    assert(connectionBags(out).map(_.split('/').last) === Seq("a.bag"))
+    assert(BagEtl.readCommitRecord(out)
+      .exists { case (c, fl) => c == 2L && fl.map(_.split('/').last) == Seq("b.bag") })
+    // redo with the bag repaired: whatever the dead attempt left in
+    // Messages or the IMU table is purged before b.bag is converted again
+    addMixedBag(dir, "b.bag", 1700000100, poisoned = false)
+    assert(BagEtl.runIncremental(spark, dir.toString, out).count == 4)
+    assert(connectionBags(out).map(_.split('/').last).sorted === Seq("a.bag", "b.bag"))
+    val m = spark.read.parquet(s"$out/Messages.parquet")
+      .agg(count(lit(1)), countDistinct(col("seqno")), min(col("seqno")), max(col("seqno")))
+      .head()
+    assert(m.getLong(0) === 7L && m.getLong(1) === 7L && m.getLong(2) === 0L &&
+      m.getLong(3) === 6L)
+    assert(spark.read.parquet(s"$out/sensor_msgs_Imu.parquet").count() === 5)
+    assert(spark.read.parquet(s"$out/std_msgs_String.parquet").count() === 2)
+    assert(BagEtl.readCommitRecord(out).contains((6L, Seq.empty[String])))
   }
 
   test("footer ranges: per-file min/max match a Spark scan") {
