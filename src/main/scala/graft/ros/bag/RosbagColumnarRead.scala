@@ -91,6 +91,10 @@ object RosbagColumnarRead {
     case RFloat64 => buf => v.appendDouble(buf.getDouble())
     case RString  => buf => {
       val n = readLen(buf)
+      // bound-check BEFORE the zero-copy view: UTF8String reads through
+      // Unsafe, so an overlong length would read (and may fault) past
+      // the payload array instead of failing like the row path
+      require(n <= buf.remaining(), s"string length $n overruns the ${buf.remaining()} bytes left")
       val arr = buf.array(); val off = buf.arrayOffset() + buf.position()
       // parity with the row path (RosSchemaMapper decodes through
       // new String(..., UTF_8), which substitutes U+FFFD): valid UTF-8

@@ -1,9 +1,10 @@
 package graft.ros.etl
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.Seqno
 import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
 
 /** The reference's whole pipeline (reference rosbag2parquet.cpp:41-63,
@@ -19,8 +20,10 @@ import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
   * reference's route-by-type, FlattenedRosWriter.cpp:273-289, becomes
   * predicate pushdown into the source), written with as many tasks as
   * its own bytes need but never so few that a task walks more chunk
-  * bytes than one Spark file split. Messages writes concurrently with
-  * the per-type tables; Connections is driver-side tiny and lands last.
+  * bytes than one Spark file split. The write phase, incremental entry
+  * and crash repair are the containers' shared [[EtlCore]]: Messages
+  * writes concurrently with the per-type tables; Connections is
+  * driver-side tiny and lands last as the commit record.
   */
 object BagEtl {
   /** The reference's `info` result (rosbag2parquet.h:6-10) plus the
@@ -34,22 +37,12 @@ object BagEtl {
     */
   final case class Info(bagname: String, count: Long, sizeBytes: Long, crcXor: Long)
 
-  /** reference main.cpp:38-54: probe `<base>`, `<base>.1`, ... —
-    * via Hadoop FS so remote outDirs (hdfs://, s3a://) version too.
-    */
-  def versionedOutputDir(base: String): String = {
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (!fs.exists(p)) base
-    else Iterator.from(1).map(i => s"$base.$i")
-      .find(c => !fs.exists(new org.apache.hadoop.fs.Path(c))).get
-  }
-
-  /** Run the conversion; returns the reference's `info` result
-    * (rosbag2parquet.h:6-10). `maxMessages` mirrors --max_mbs's
-    * test-scope-limiting role (main.cpp:26) with row granularity.
-    */
-  /** @param keepRawBlob retain the raw serialized `data` column on
+  /** Run the conversion into a fresh (versioned) output dir; returns
+    * the reference's `info` result (rosbag2parquet.h:6-10).
+    *
+    * @param maxMessages mirrors --max_mbs's test-scope-limiting role
+    *        (main.cpp:26) with row granularity.
+    * @param keepRawBlob retain the raw serialized `data` column on
     *        per-type tables (reference README.md:106 "you don't lose
     *        any data"). Since this engine ALSO materializes arrays
     *        (unlike the reference), blob-dominated types store their
@@ -78,8 +71,7 @@ object BagEtl {
     *        only where decompression is dear: it measured faster on a
     *        bz2 bag (PERF.md), but SLOWER than the default per-type
     *        re-scans on a 6-type lz4 fleet (lz4 decompresses at GB/s).
-    */
-  /** @param nativeTimestamp additionally emit `time` as a parquet
+    * @param nativeTimestamp additionally emit `time` as a parquet
     *        TIMESTAMP (micros, NTZ) derived from time_sec/time_nsec
     *        (floor to micros) — reference TODO rosbag2parquet.cpp:31-32
     *        "use parquet timestamps rather than ros sec/nsec". Additive:
@@ -92,510 +84,51 @@ object BagEtl {
   def run(spark: SparkSession, bagPath: String, outDir: String,
           maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
           blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
-          stagedByType: Boolean = false, nativeTimestamp: Boolean = false): Info = {
+          stagedByType: Boolean = false, nativeTimestamp: Boolean = false): Info =
     // bagPath may be one file, a directory, or a glob — the dataset
     // shape a 100 TB robotics corpus actually arrives in.
-    val bags = graft.ros.bag.RosbagIO.resolveBags(bagPath)
-    runBags(spark, bags, new java.io.File(bagPath).getName,
-      versionedOutputDir(outDir), maxMessages, keepRawBlob, blobSideTable,
-      blobThreshold, stagedByType, nativeTimestamp)._1
-  }
+    runBags(spark, graft.ros.bag.RosbagIO.resolveBags(bagPath),
+      new java.io.File(bagPath).getName, EtlCore.versionedOutputDir(outDir),
+      maxMessages, keepRawBlob, blobSideTable, blobThreshold, stagedByType,
+      nativeTimestamp)
 
-  /** Incremental multi-bag conversion: ETL only the bags under
-    * `bagPath` not yet present in `outDir`'s Messages (matched by
-    * bag_path), appending Messages/Connections/per-type rows with
-    * seqnos continuing after the existing maximum — the daily
-    * fleet-upload shape: new drives arrive, the corpus tables grow,
-    * nothing already converted is re-read or re-written. Table naming
-    * stays consistent across increments via the `_tables.json`
-    * manifest: a (datatype, md5) variant keeps its historical table;
-    * a NEW variant of a known datatype always gets the md5-namespaced
-    * name (the historical table is never renamed). Seqnos are dense
-    * overall; cross-bag time interleave holds WITHIN each increment
-    * (across increments, arrival order dominates — an ingest log, not
-    * a global re-sort). Returns the `info` of the appended increment
-    * (zero-count when there is nothing new). On a fresh/absent outDir
-    * this is exactly `run`.
+  /** Incremental multi-bag conversion ([[EtlCore.incremental]]): ETL
+    * only the bags under `bagPath` not yet recorded in `outDir`'s
+    * Connections (matched by bag_path), appending Messages/Connections/
+    * per-type rows with seqnos continuing after the committed maximum —
+    * the daily fleet-upload shape: new drives arrive, the corpus tables
+    * grow, nothing already converted is re-read or re-written. Table
+    * naming stays consistent across increments via the `_tables.json`
+    * manifest: a (datatype, md5) variant keeps its historical table; a
+    * NEW variant of a known datatype always gets the md5-namespaced name
+    * (the historical table is never renamed). Seqnos are dense overall;
+    * cross-bag time interleave holds WITHIN each increment (across
+    * increments, arrival order dominates — an ingest log, not a global
+    * re-sort). Returns the `info` of the appended increment (zero-count
+    * when there is nothing new). On a fresh/absent outDir this is
+    * exactly `run` into outDir itself; a bootstrap that crashed before
+    * its Connections commit is purged and converted afresh.
     */
   def runIncremental(spark: SparkSession, bagPath: String, outDir: String,
           keepRawBlob: Boolean = true,
           blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
           stagedByType: Boolean = false, nativeTimestamp: Boolean = false): Info = {
-    val messagesPath = new org.apache.hadoop.fs.Path(s"$outDir/Messages.parquet")
-    val fs = messagesPath.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
     val dirName = new java.io.File(bagPath).getName
-    if (!fs.exists(messagesPath)) {
-      // bootstrap WITHOUT run()'s versioned-dir redirect: a pre-created
-      // or crash-remnant outDir lacking Messages must not silently fork
-      // the corpus into outDir.1, .2, ... on every call (incremental
-      // mode would never engage). Write into outDir itself; leftover
-      // tables from a crashed attempt fail loudly via ErrorIfExists.
-      return runBags(spark, graft.ros.bag.RosbagIO.resolveBags(bagPath),
-        dirName, outDir, None, keepRawBlob, blobSideTable, blobThreshold,
-        stagedByType, nativeTimestamp)._1
-    }
-    val existing = spark.read.parquet(s"$outDir/Messages.parquet")
-    require(existing.columns.contains("bag_path"),
-      s"$outDir predates the bag_path spine column — re-run the full ETL once")
-    // Done-set = Connections.bag_path ALONE. Connections is written
-    // AFTER Messages (runBags), so its presence implies the whole
-    // increment landed: for a normal bag, Messages landed first; for a
-    // zero-message bag, Connections IS its complete output (a
-    // Messages-only done-set would re-convert it every increment,
-    // multiplying every msg↔conn join). Unioning in Messages.bag_path
-    // — the pre-round-10 behavior — would mark a bag done after a
-    // crash in the window between the Messages and Connections writes,
-    // leaving a permanent silent hole in Connections; Connections-only
-    // redoes that bag after repairCrashedIncrement purges the dead
-    // attempt's rows — exactly-once output, no consumer-side dedup.
-    // (A bag with zero connections AND zero messages writes nothing and
-    // is re-indexed each increment — a no-op re-read, not duplication.)
-    val connPath = new org.apache.hadoop.fs.Path(s"$outDir/Connections.parquet")
-    val done =
-      if (!fs.exists(connPath)) Set.empty[String]
-      else spark.read.parquet(s"$outDir/Connections.parquet")
-        .select(col("bag_path")).distinct().collect().map(_.getString(0)).toSet
-    // crash repair + committed seqno max: a redo after a crash in the
-    // data→commit-record window is exactly-once — the dead increment's
-    // rows are purged part-file-granular before reconversion, and its
-    // seqno range is re-used (dense, collision-free)
-    val maxClean = repairCrashedIncrement(spark, outDir, "bag_path", done,
-      dimension = "Connections")
-    val newBags = graft.ros.bag.RosbagIO.resolveBags(bagPath).filterNot(done)
-    if (newBags.isEmpty) return Info(dirName, 0L, 0L, 0L)
-    val offset = maxClean + 1
-    runBags(spark, newBags, dirName, outDir, None, keepRawBlob, blobSideTable,
-      blobThreshold, stagedByType, nativeTimestamp,
-      seqnoOffset = offset, naming = readManifest(outDir), append = true)._1
-  }
-
-  /** Table-name manifest `<out>/_tables.json`: (datatype, md5) → table
-    * name, maintained by every run so increments keep naming stable.
-    * Keys are ROS identifiers + hex digests — no JSON escaping needed.
-    */
-  private def manifestFsPath(out: String) =
-    new org.apache.hadoop.fs.Path(s"$out/_tables.json")
-  // private[ros]: McapEtl keeps the SAME manifest contract for its
-  // (schema_name, md5) table naming, so the two ETLs share one format
-  /** Write (or in append mode, extend) the run's Vertica DDL script —
-    * shared by all three container ETLs (O14).
-    */
-  private[ros] def writeDdlFile(out: String, ddl: String, append: Boolean): Unit = {
-    val ddlPath = new org.apache.hadoop.fs.Path(s"$out/vertica_load_tables.sql")
-    val ddlFs = ddlPath.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    val priorDdl =
-      if (append && ddlFs.exists(ddlPath)) {
-        val in = ddlFs.open(ddlPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      } else ""
-    val os = ddlFs.create(ddlPath, true)
-    try os.write((priorDdl + ddl)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
-
-  private[ros] def readManifest(out: String): Map[(String, String), String] = {
-    val p = manifestFsPath(out)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val pair = """"([^"]*)\|([^"]*)"\s*:\s*"([^"]*)"""".r
-      pair.findAllMatchIn(s).map(m => (m.group(1), m.group(2)) -> m.group(3)).toMap
-    }
-  }
-  private[ros] def writeManifest(out: String, m: Map[(String, String), String]): Unit = {
-    val p = manifestFsPath(out)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    val body = m.toSeq.sortBy(t => (t._1._1, t._1._2))
-      .map { case ((dt, md5), n) => s""""$dt|$md5":"$n"""" }
-      .mkString("{", ",", "}")
-    val os = fs.create(p, true)
-    try os.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
-
-  /** Incremental commit record `<out>/_commit.json`:
-    * `{"committed": M, "inflight": [files...]}`. `committed` is the
-    * max seqno of the last COMMITTED increment; `inflight` is the file
-    * set of an increment currently writing (recorded BEFORE its first
-    * data write, cleared -- with the new max -- only AFTER its dimension
-    * commit landed). [[repairCrashedIncrement]] reads it to make the
-    * steady-state append metadata-only: without it, knowing the
-    * committed max required a seqno scan of Messages on EVERY append
-    * (driver cost growing with total corpus size -- VERDICT r11 #2).
-    * Same regex-parsed flat format as the `_tables.json` manifest.
-    */
-  private def commitRecordFsPath(out: String) =
-    new org.apache.hadoop.fs.Path(s"$out/_commit.json")
-  private[ros] def readCommitRecord(out: String): Option[(Long, Seq[String])] =
-    try {
-      val p = commitRecordFsPath(out)
-      val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val com = """"committed"\s*:\s*(-?\d+)""".r.findFirstMatchIn(s)
-          .map(_.group(1).toLong)
-        // the array body must be cut at the UNQUOTED ']' -- a ']' is
-        // legal inside a file path, and `[^\]]*` would truncate there,
-        // parsing a non-empty inflight set as empty (a crashed
-        // increment would then be mis-repaired as steady state)
-        val flight = extractInflightBody(s)
-          .map(body => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(body)
-            .map(f => unescapeJson(f.group(1))).toSeq)
-        // a half-written/corrupt record must NOT be trusted: None sends
-        // the caller down the exact legacy-scan path
-        for (c <- com; fl <- flight) yield (c, fl)
-      }
-    } catch { case _: Throwable => None }
-  private[ros] def writeCommitRecord(out: String, committed: Long,
-      inflight: Seq[String]): Unit = {
-    val p = commitRecordFsPath(out)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    val body = s"""{"committed":$committed,"inflight":[""" +
-      inflight.map(f => "\"" + escapeJson(f) + "\"").mkString(",") + "]}"
-    val os = fs.create(p, true)
-    try os.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-  }
-  /** Substring between `"inflight":[` and its matching UNQUOTED `]`,
-    * tracking in-string/escape state so bracket characters inside
-    * quoted file paths don't terminate the scan. None when the key is
-    * absent or the array is unterminated (half-written record).
-    */
-  private[ros] def extractInflightBody(s: String): Option[String] = {
-    """"inflight"\s*:\s*\[""".r.findFirstMatchIn(s).flatMap { m =>
-      var i = m.end
-      var inStr = false
-      var escaped = false
-      var end = -1
-      while (i < s.length && end < 0) {
-        val c = s.charAt(i)
-        if (inStr) {
-          if (escaped) escaped = false
-          else if (c == '\\') escaped = true
-          else if (c == '"') inStr = false
-        } else if (c == '"') inStr = true
-        else if (c == ']') end = i
-        i += 1
-      }
-      if (end < 0) None else Some(s.substring(m.end, end))
-    }
-  }
-  // full JSON string escaping incl. control characters (shared with the
-  // streaming offset logs) -- the minimal quote/backslash pair would
-  // emit invalid JSON for a path containing a raw newline
-  private def escapeJson(s: String): String =
-    graft.ros.bag.RosbagDirOffset.esc(s)
-  private def unescapeJson(s: String): String =
-    graft.ros.bag.RosbagDirOffset.unesc(s)
-
-  /** Per-part-file (path, min seqno, max seqno) of a table directory,
-    * read DRIVER-SIDE from the parquet footers on the bounded
-    * [[graft.ros.DriverPool]] -- O(#files) metadata reads, zero row
-    * scans, no Spark jobs. Parquet footers store exact min/max column
-    * statistics per row group; seqno is a never-null INT64, so the
-    * stats are authoritative. Returns None when the table has no
-    * seqno column (dimension-shaped table -- nothing to purge) and
-    * Left when any footer lacks usable statistics (caller falls back
-    * to an exact Spark scan for that table). Zero-row-group files
-    * (the empty schema-preserving part written when a purge empties a
-    * table) contribute no range.
-    */
-  private[ros] def footerSeqnoRanges(dir: String)
-      : Option[Either[Unit, Seq[(String, Long, Long)]]] = {
-    import scala.jdk.CollectionConverters._
-    import scala.language.existentials  // parquet's Statistics[_ <: Comparable[_]]
-    val conf = graft.ros.bag.RosbagIO.hadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val parts = fs.listStatus(p).toSeq.filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (parts.isEmpty) return Some(Right(Seq.empty))
-    // per file: None = no seqno field; Some(Left) = stats missing;
-    // Some(Right(None)) = zero rows; Some(Right(Some(range)))
-    val perFile = graft.ros.DriverPool.parMap(parts) { st =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try {
-        val md = rd.getFooter
-        if (!md.getFileMetaData.getSchema.containsField("seqno")) None
-        else {
-          val ranges = md.getBlocks.asScala.filter(_.getRowCount > 0).map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == "seqno")
-              .flatMap { c =>
-                val s = c.getStatistics
-                if (s == null || s.isEmpty || !s.hasNonNullValue) None
-                else Some((s.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
-                  s.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
-              }
-          }
-          if (ranges.exists(_.isEmpty))
-            Some(Left(())): Option[Either[Unit, Option[(String, Long, Long)]]]
-          else if (ranges.isEmpty) Some(Right(None))
-          else Some(Right(Some((st.getPath.toString,
-            ranges.map(_.get._1).min, ranges.map(_.get._2).max))))
-        }
-      } finally rd.close()
-    }
-    if (perFile.forall(_.isEmpty)) None          // no seqno column anywhere
-    else if (perFile.exists(_.exists(_.isLeft))) Some(Left(()))
-    else Some(Right(perFile.flatten.collect { case Right(Some(r)) => r }))
-  }
-
-  /** Crash repair for the incremental ETLs (all three containers),
-    * run at the START of every incremental append: an increment that
-    * died between its data writes and its dimension commit record
-    * (Connections / Channels / Topics, written LAST) left rows for
-    * undone files in Messages / RawMessages / the per-type tables /
-    * the blob side tables. Purging them BEFORE the redo makes the
-    * redo exactly-once -- no consumer-side dropDuplicates contract.
-    *
-    * The purge key is `seqno`, which every data table carries
-    * (including the (seqno, data) blob side tables the path column
-    * cannot reach): repair runs before every append, so at most ONE
-    * dead increment exists, and its seqnos all exceed the committed
-    * maximum (the dead offset was committed+1 at its run). Granularity
-    * is the part FILE: a dead increment's append jobs wrote part files
-    * holding only its own rows, so files with min(seqno) > committed
-    * drop outright; a mixed file (possible only if a foreign
-    * compaction rewrote the table between crash and redo) falls back
-    * to rewriting that table's surviving rows.
-    *
-    * Steady state is METADATA-ONLY (VERDICT r11 #2): the `_commit.json`
-    * record supplies the committed max, and debris detection reads
-    * per-file seqno min/max from parquet FOOTERS driver-side
-    * ([[footerSeqnoRanges]]) -- a no-crash append launches no Spark job
-    * over any historical table. The exact Spark-scan path survives for
-    * dirs predating the record, for footers without statistics, and
-    * for two inconsistent states the record cannot resolve (dimension
-    * table wiped externally; a partially-visible dimension commit).
-    * A crash AFTER the dimension write but BEFORE the record finalize
-    * shows `inflight` fully inside `done`: that increment committed,
-    * so its end is recovered from the Messages footer max and stamped.
-    *
-    * Returns the committed max -- the redo continues seqnos at max+1,
-    * re-using a dead increment's range (dense, collision-free: its
-    * old rows are gone).
-    */
-  private[ros] def repairCrashedIncrement(spark: SparkSession, outDir: String,
-      pathCol: String, done: Set[String], dimension: String): Long = {
-    recoverRenameAside(outDir)
-    readCommitRecord(outDir) match {
-      case Some((committed, _)) if done.isEmpty && committed >= 0 =>
-        // inconsistent: committed rows imply a non-empty dimension
-        // (every message row has a connection). The dimension was
-        // wiped outside the protocol -- fall back to the exact scan,
-        // which purges everything uncommitted-by-done and lets the
-        // caller redo it.
-        legacyRepair(spark, outDir, pathCol, done, dimension)
-      case Some((committed, inflight)) =>
-        val inDone = inflight.count(done)
-        if (inflight.nonEmpty && inDone == inflight.size) {
-          // crash between the dimension write and the record finalize:
-          // the increment landed whole. Its end is the Messages footer
-          // max (repair ran before it started, so no older debris).
-          val m = footerSeqnoRanges(s"$outDir/Messages.parquet") match {
-            case Some(Right(rs)) if rs.nonEmpty => rs.map(_._3).max
-            case Some(Right(_)) => -1L
-            case _ =>
-              val r = spark.read.parquet(s"$outDir/Messages.parquet")
-                .agg(max(col("seqno"))).head()
-              if (r.isNullAt(0)) -1L else r.getLong(0)
-          }
-          writeCommitRecord(outDir, m, Nil)
-          m
-        } else if (inflight.nonEmpty && inDone > 0) {
-          // partially-visible dimension commit (non-atomic multi-file
-          // commit observed mid-window) -- exact scan resolves it
-          legacyRepair(spark, outDir, pathCol, done, dimension)
-        } else {
-          // steady state (inflight empty) or a dead increment
-          // (inflight fully absent from done): any row above
-          // `committed` is debris. Footer-verified on every append --
-          // metadata-only when clean.
-          purgeAbove(spark, outDir, dimension, committed)
-          writeCommitRecord(outDir, committed, Nil)
-          committed
-        }
-      case None =>
-        legacyRepair(spark, outDir, pathCol, done, dimension)
+    EtlCore.incremental(spark, outDir, "Connections", "bag_path",
+        graft.ros.bag.RosbagIO.resolveBags(bagPath), Info(dirName, 0L, 0L, 0L)) {
+      (bags, offset, naming, append) =>
+        runBags(spark, bags, dirName, outDir, None, keepRawBlob, blobSideTable,
+          blobThreshold, stagedByType, nativeTimestamp, offset, naming, append)
     }
   }
 
-  /** The data-table directories of an ETL output (everything but the
-    * dimension commit record).
-    */
-  private def dataTableDirs(fs: org.apache.hadoop.fs.FileSystem,
-      outPath: org.apache.hadoop.fs.Path, dimension: String): Seq[String] =
-    fs.listStatus(outPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.endsWith(".parquet") &&
-        s.getPath.getName != s"$dimension.parquet")
-      .map(_.getPath.toString).sorted
-
-  /** Delete dead part files / rewrite a mixed table so no row with
-    * seqno > maxClean survives, given the per-file (path, min, max)
-    * ranges. A purge that would empty the table preserves its SCHEMA
-    * (one empty part file) instead: a bare directory bricks every
-    * later `spark.read.parquet` with "unable to infer schema"
-    * (ADVICE r11), and in incremental mode the dimension may still
-    * list done files, so a silent directory delete would send the
-    * next run down the bootstrap path into an ErrorIfExists failure.
-    */
-  private def purgeWithRanges(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, maxClean: Long,
-      ranges: Seq[(String, Long, Long)]): Unit = {
-    val dead = ranges.filter(_._2 > maxClean)
-    val mixed = ranges.exists(r => r._2 <= maxClean && r._3 > maxClean)
-    if (mixed) rewriteTableBelow(spark, fs, dir, maxClean)
-    else if (dead.nonEmpty) {
-      val emptied = dead.size == ranges.size
-      val schema = if (emptied) Some(spark.read.parquet(dir).schema) else None
-      dead.foreach { r =>
-        // a silent delete no-op would leave dead seqnos to collide with
-        // the redo's range -- fail loudly like rewriteTableBelow's renames
-        require(fs.delete(new org.apache.hadoop.fs.Path(r._1), false),
-          s"repair: delete failed for ${r._1}")
-      }
-      schema.foreach { sc =>
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(Seq.empty[Row], 1), sc)
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy").parquet(dir)
-      }
-    }
-  }
-
-  /** Rewrite a table keeping only rows with seqno <= maxClean -- the
-    * mixed-file fallback. Promotion is rename-ASIDE, never
-    * delete-then-rename: a crash between a delete and the promoting
-    * rename would lose the whole table (ADVICE r11); with the aside
-    * dance every crash window leaves either the original or the
-    * rewrite recoverable ([[recoverRenameAside]]).
-    */
-  private def rewriteTableBelow(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, maxClean: Long): Unit = {
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__repair")
-    val aside = new org.apache.hadoop.fs.Path(dir + "__old")
-    spark.read.parquet(dir).filter(col("seqno") <= maxClean)
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy").parquet(tmp.toString)
-    fs.delete(aside, true)
-    require(fs.rename(dp, aside), s"repair: rename aside failed for $dir")
-    require(fs.rename(tmp, dp), s"repair: promote failed for $dir")
-    fs.delete(aside, true)
-    ()
-  }
-
-  /** Recover from a crash inside [[rewriteTableBelow]]'s swap: a
-    * `X.parquet__old` with no `X.parquet` means the promote rename
-    * never ran -- restore the original (the rewrite is a pure filter of
-    * it, so redoing the repair is idempotent). Leftover `__repair` /
-    * `__old` dirs next to a live table are stale scratch and drop.
-    */
-  private def recoverRenameAside(outDir: String): Unit = {
-    val conf = graft.ros.bag.RosbagIO.hadoopConf()
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(conf)
-    if (!fs.exists(outPath)) return
-    fs.listStatus(outPath).toSeq.filter(_.getPath.getName.endsWith("__old"))
-      .foreach { s =>
-        val base = new org.apache.hadoop.fs.Path(
-          s.getPath.toString.stripSuffix("__old"))
-        if (!fs.exists(base)) { fs.rename(s.getPath, base); () }
-        else { fs.delete(s.getPath, true); () }
-      }
-    fs.listStatus(outPath).toSeq.filter(_.getPath.getName.endsWith("__repair"))
-      .foreach { s => fs.delete(s.getPath, true); () }
-  }
-
-  /** Metadata-only debris purge: every data table's per-file seqno
-    * ranges come from parquet footers; rows above `maxClean` are
-    * purged. Tables whose footers lack statistics fall back to an
-    * exact per-table Spark scan.
-    */
-  private def purgeAbove(spark: SparkSession, outDir: String,
-      dimension: String, maxClean: Long): Unit = {
-    val conf = graft.ros.bag.RosbagIO.hadoopConf()
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(conf)
-    dataTableDirs(fs, outPath, dimension).foreach { dir =>
-      footerSeqnoRanges(dir) match {
-        case None => ()                        // no seqno column: skip
-        case Some(Right(ranges)) =>
-          purgeWithRanges(spark, fs, dir, maxClean, ranges)
-        case Some(Left(_)) =>                  // stats missing: exact scan
-          purgeWithRanges(spark, fs, dir, maxClean, scanSeqnoRanges(spark, dir))
-      }
-    }
-  }
-
-  /** Exact per-file seqno ranges via a Spark scan -- the fallback when
-    * footers carry no statistics, and the legacy path's workhorse.
-    */
-  private def scanSeqnoRanges(spark: SparkSession, dir: String)
-      : Seq[(String, Long, Long)] =
-    spark.read.parquet(dir)
-      .groupBy(input_file_name().as("__part"))
-      .agg(min(col("seqno")).as("__mn"), max(col("seqno")).as("__mx"))
-      .collect()
-      .map(r => (decodeFileName(r.getString(0)),
-        r.getAs[Long]("__mn"), r.getAs[Long]("__mx")))
-      .toSeq
-
-  /** `input_file_name()` yields a URI-ENCODED string (space as `%20`,
-    * `%` as `%25`...); `new Path(string)` does NOT decode percent
-    * escapes, so deleting by the raw value targets a non-existent
-    * literal path. Round-trip through java.net.URI to recover the
-    * filesystem path the footers/listings would report.
-    */
-  private def decodeFileName(name: String): String =
-    try new org.apache.hadoop.fs.Path(new java.net.URI(name)).toString
-    catch { case _: java.net.URISyntaxException => name }
-
-  /** The pre-record exact repair: derives the committed max from the
-    * dimension's done-set with full scans (the r10 behavior), then
-    * stamps a commit record so the NEXT append takes the metadata-only
-    * path. Also the escape hatch for the record-inconsistent states.
-    */
-  private def legacyRepair(spark: SparkSession, outDir: String,
-      pathCol: String, done: Set[String], dimension: String): Long = {
-    val conf = graft.ros.bag.RosbagIO.hadoopConf()
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(conf)
-    val messages = spark.read.parquet(s"$outDir/Messages.parquet")
-    val msgFiles = messages.select(col(pathCol)).distinct()
-      .collect().map(_.getString(0)).toSet
-    val undone = msgFiles -- done
-    val maxClean: Long = {
-      val clean =
-        if (undone.isEmpty) messages
-        else messages.filter(!col(pathCol).isin(undone.toSeq.sorted: _*))
-      val r = clean.agg(max(col("seqno"))).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0)
-    }
-    dataTableDirs(fs, outPath, dimension).foreach { dir =>
-      val t = spark.read.parquet(dir)
-      if (t.columns.contains("seqno"))
-        purgeWithRanges(spark, fs, dir, maxClean, scanSeqnoRanges(spark, dir))
-    }
-    writeCommitRecord(outDir, maxClean, Nil)
-    maxClean
-  }
-
-  /** The conversion core over an explicit bag list. `seqnoOffset`
-    * shifts the dense seqno (incremental appends continue after the
-    * existing max); `naming` pins historical (datatype, md5) → table
-    * names; `append` switches every table write to SaveMode.Append and
-    * restricts DDL emission to newly-created tables. Returns the info
-    * of THIS run's slice plus the (datatype, md5, table) groups.
+  /** The bag conversion over an explicit bag list, run inside the
+    * shared write phase ([[EtlCore.convert]]). `seqnoOffset` shifts the
+    * dense seqno (incremental appends continue after the existing max);
+    * `naming` pins historical (datatype, md5) → table names; `append`
+    * switches every table write to SaveMode.Append and restricts DDL
+    * emission to newly-created tables. Returns the info of THIS run's
+    * slice.
     */
   private def runBags(spark: SparkSession, bags: Seq[String], bagName: String,
           out: String, maxMessages: Option[Long], keepRawBlob: Boolean,
@@ -603,254 +136,158 @@ object BagEtl {
           stagedByType: Boolean, nativeTimestamp: Boolean,
           seqnoOffset: Long = 0L,
           naming: Map[(String, String), String] = Map.empty,
-          append: Boolean = false): (Info, Seq[(String, String, String)]) = {
+          append: Boolean = false): Info = {
     require(!blobSideTable || keepRawBlob,
       "blobSideTable requires keepRawBlob=true (there is no blob column to externalize)")
-    // commit-record protocol, step 1: declare the increment in-flight
-    // BEFORE any data write. A crash anywhere below leaves the record
-    // naming this increment's files, so repairCrashedIncrement can
-    // purge its debris from footer metadata alone.
-    writeCommitRecord(out, seqnoOffset - 1, bags)
-    // opt-in phase timing for throughput work (GRAFT_ETL_TIMING=1)
-    val timing = sys.env.contains("GRAFT_ETL_TIMING")
-    var tLast = System.nanoTime()
-    def lap(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[etl-timing] $phase%-22s ${(now - tLast) / 1e9}%6.2fs")
-      tLast = now
-    }
-    val indexes = graft.ros.bag.RosbagIO.scanIndexes(bags)
-    lap("scanIndex")
-
-    // Connections dimension (reference FlattenedRosWriter.cpp:209-224),
-    // keyed (bag_path, connection_id) — connection ids are per-bag.
-    val connections = graft.ros.bag.RosbagTables.fromIndexes(spark, indexes)
-
-    // md5 consistency per datatype WITHIN each bag (reference
-    // FlattenedRosWriter.cpp:287 asserts per-bag).
-    indexes.foreach { case (b, index) =>
-      index.connections.groupBy(_.datatype).foreach { case (dt, cs) =>
-        require(cs.map(_.md5sum).distinct.size == 1,
-          s"datatype $dt has conflicting md5sums across connections in $b")
-      }
-    }
-
-    // ACROSS bags a datatype may drift (SURVEY §7.4.3: a fleet with a
-    // mid-life message-definition change). Each (datatype, md5) variant
-    // becomes its own table; drifted types namespace the table name
-    // with the md5 prefix so both variants land side by side.
-    // (datatype, md5, msgDef, bags carrying it, tableName)
-    val typeGroups: Seq[(String, String, String, Seq[String], String)] = {
-      val all = indexes.flatMap { case (b, index) =>
-        index.connections.map(c => (c.datatype, c.md5sum, c.msgDef, b))
-      }
-      val byType = all.groupBy(_._1)
-      byType.toSeq.sortBy(_._1).flatMap { case (dt, rows) =>
-        val base = dt.replace("/", "_") // reference MessageTable.cpp:315
-        val byMd5 = rows.groupBy(_._2).toSeq.sortBy(_._1)
-        byMd5.map { case (md5, vs) =>
-          // historical names (manifest) win; a NEW variant of a
-          // historically-known datatype is always namespaced (the
-          // legacy plain table keeps its variant and is never renamed)
-          val name = naming.getOrElse((dt, md5),
-            if (naming.keys.exists(_._1 == dt)) s"${base}__${md5.take(8)}"
-            else if (byMd5.size == 1) base
-            else s"${base}__${md5.take(8)}")
-          (dt, md5, vs.head._3, vs.map(_._4).distinct, name)
-        }
-      }
-    }
-
-    // ONE scan relation over the whole bag list (the "bags" option) —
-    // not an N-way union, which bloats the analyzer at fleet scale
-    val raw0 = spark.read.format("rosbag")
-      .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(bags)).load()
-    val raw = maxMessages.map(n => raw0.limit(n.toInt).toDF()).getOrElse(raw0)
-
-    // Stage the spine meta to parquet BEFORE the seqno operator. The
-    // range-partition seqno needs two passes over its input (bound
-    // sampling + shuffle write); run those against a kilobytes-per-
-    // million-rows parquet staging table instead of the bag source, so
-    // every bag chunk is read (and decompressed) exactly ONCE for the
-    // spine. Meta-only projection: the source's column pruning skips
-    // payload decode entirely. In stagedByType mode the same single
-    // pass ALSO stages the raw bytes partitioned by datatype — the
-    // only bag scan of the whole ETL.
     val stageDir = s"$out/_spine"
-    val metaCols = Seq(col("bag_path"), col("chunk_idx"), col("offset"), col("time_sec"),
-      col("time_nsec"), col("size"), col("connection_id"),
-      col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
-    // staging dirs are scratch: Overwrite, so a hard crash that never
-    // reached the cleanup cannot fail the redo with "path exists"
-    val staged =
-      if (stagedByType) raw.select(metaCols :+ col("datatype") :+ col("data"): _*)
-      else raw.select(metaCols: _*)
-    val stageWriter = staged.write.mode(SaveMode.Overwrite)
-    (if (stagedByType) stageWriter.partitionBy("datatype") else stageWriter)
-      .option("compression", "snappy").parquet(stageDir)
-    lap("spine-stage-write")
-    // internal read-backs pass the schema this run wrote: without it
-    // every read of a staging dir launches a footer-inference job
-    val stageRead = spark.read.schema(staged.schema).parquet(stageDir)
-
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // Exact payload bytes per (bag, connection) — one aggregate over
-    // the staged meta (kilobytes; no bag re-scan), run beside the seqno
-    // shuffle below. It sizes each per-type write by the bytes that
-    // type actually writes.
-    val connBytesF = Future { scala.concurrent.blocking {
-      stageRead.groupBy(col("bag_path"), col("connection_id"))
-        .agg(sum(col("size").cast("long")))
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    } }
-
-    // Global seqno in merge-time order with storage-order tie-break —
-    // rosbag::View semantics (reference rosbag2parquet.cpp:45-52;
-    // seqno FlattenedRosWriter.cpp:195,256). The meta select prunes
-    // the staged blob pages out of the read in stagedByType mode.
-    // bag_path in the tie-break: rosbag::View merge-time order within a
-    // bag, deterministic (name-sorted) interleave across equal-time
-    // rows from different bags.
-    val spine0 = Seqno.globalSeqno(
-      stageRead.select(metaCols: _*),
-      Seq(col("time_sec"), col("time_nsec"), col("bag_path"), col("chunk_idx"), col("offset")))
-    // incremental appends continue the dense seqno after the existing
-    // table's maximum
-    val spine = if (seqnoOffset == 0L) spine0
-      else spine0.withColumn("seqno", col("seqno") + lit(seqnoOffset))
-
-    // Messages fact table (reference FlattenedRosWriter.cpp:49-87), plus
-    // the sensor-time header stamp (nullable; reference TODO
-    // rosbag2parquet.cpp:28-30) read in the source from the wire prefix.
-    val messages0 = spine.select(
-      col("seqno"), col("bag_path"), col("time_sec"), col("time_nsec"), col("size"),
-      col("connection_id"),
-      col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
-    val messages = if (nativeTimestamp)
-      // floor-to-micros. Built with pure NTZ arithmetic (timestampadd on
-      // an NTZ epoch literal): a timestamp_micros→NTZ cast would render
-      // the instant in the WRITER's session timezone and shift the
-      // stored value for any non-UTC session — this form is
-      // timezone-independent by construction.
-      messages0.withColumn("time",
-        expr("timestampadd(MICROSECOND, " +
-          "cast(time_sec as bigint) * 1000000 + time_nsec div 1000, " +
-          "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
-    else messages0
-
-    val writeMode = if (append) SaveMode.Append else SaveMode.ErrorIfExists
-
-    // Seqno map: (chunk_idx, offset) -> seqno, ints only — the blobs
-    // never ride a seqno shuffle. Each per-type table is a TYPED
-    // source read (decode happens inside the PartitionReader as
-    // InternalRows — no Row/encoder boxing) joined to the seqno map on
-    // the stable storage identity. The reference's route-by-type
-    // dispatch (FlattenedRosWriter.cpp:273-289) is the datatype option
-    // pushed into the source.
     val seqnoDir = s"$out/_seqno"
-    val seqnoCols = spine.select(col("bag_path"), col("chunk_idx"), col("offset"), col("seqno"))
-    seqnoCols.write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy").parquet(seqnoDir)
-    lap("seqno-map-write")
-    val seqnoMap = spark.read.schema(seqnoCols.schema).parquet(seqnoDir)
-    val connBytes = Await.result(connBytesF, Duration.Inf)
-    val (writeBudget, _) = graft.ros.PartitionPacking.budgetBytes(connBytes.values.sum)
-    val maxSplitBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / math.max(1L, b)
+    val (slice, _) = EtlCore.convert(spark, out, bags, "bag_path", "Connections",
+        seqnoOffset, append, naming, Seq(seqnoDir, stageDir)) { jobs =>
+      val indexes = graft.ros.bag.RosbagIO.scanIndexes(bags)
+      jobs.lap("scanIndex")
 
-    // one table per DATATYPE (two same-type connections may carry
-    // textually different but md5-equal definition strings). The
-    // per-type writes and Messages are independent (distinct output
-    // dirs, shared read-only staging), so they run CONCURRENTLY:
-    // Spark's scheduler interleaves their stages, overlapping one
-    // job's write/commit stalls with another's scan — on a cluster
-    // this keeps executors busy across the per-type tail. DDL is
-    // collected per type and appended in the original datatype order
-    // for deterministic output.
-    // one job group for all concurrent writes: on any failure the
-    // siblings are cancelled instead of racing caller teardown (job
-    // groups are thread-local, so each future sets it)
-    val jobGroup = s"graft-etl-${java.util.UUID.randomUUID()}"
-    def inGroup[T](desc: String, label: String)(body: => T): Future[T] =
-      Future { scala.concurrent.blocking {   // blocking{}: Spark actions
-        // park threads — without it the global EC caps concurrency at
-        // CPU count and starves other users of the pool
-        spark.sparkContext.setJobGroup(jobGroup, desc, interruptOnCancel = true)
-        try {
-          val t0 = System.nanoTime()
-          val r = body
-          // timed locally: under concurrency the shared lap() deltas
-          // would time the whole phase
-          if (timing) System.err.println(
-            f"[etl-timing] $label%-22s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-          r
-        // pooled EC thread: clear the thread-local group so later Spark
-        // work on this thread isn't attributed to a dead ETL group with
-        // interruptOnCancel it never asked for
-        } finally spark.sparkContext.clearJobGroup()
-      } }
-    val messagesWrite = inGroup("Messages", "messages-write") {
-      messages.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Messages.parquet")
-    }
-    val typeDdl = typeGroups.map { case (datatype, md5, groupMsgDef, groupBags, tableName) =>
-      // Write partitions sized by the bytes this table writes (exact,
-      // from the staged sizes) against the run's per-core budget — the
-      // reference cuts each table's row groups at a byte target too
-      // (TableBuffer.cpp:149-174). Floor: no task walks more chunk
-      // bytes than one Spark file split, so sparse types and slow
-      // codecs keep their scan parallelism (at roughly parallelism x
-      // maxPartitionBytes and above, this IS the scan's own packing).
-      // coalesce merges only ADJACENT scan partitions and never
-      // exceeds the count the scan planned.
-      val bagSet = groupBags.toSet
-      val inGroupBags = indexes.filter { case (b, _) => bagSet(b) }
-      val typeBytes = inGroupBags.map { case (b, index) =>
-        index.connections.filter(c => c.datatype == datatype && c.md5sum == md5)
-          .map(c => connBytes.getOrElse((b, c.connId), 0L)).sum
-      }.sum
-      val walked = inGroupBags.map(_._2.chunks.map(_.uncompressedSize.toLong).sum).sum
-      val writeParts = math.max(1L, math.max(ceilDiv(typeBytes, writeBudget),
-        ceilDiv(walked, maxSplitBytes))).min(Int.MaxValue.toLong).toInt
-      inGroup(s"per-type $tableName", s"table:$tableName") {
-        val ddl = new StringBuilder
-        // `joined`: the per-type frame. `rawForSide`: a lineage for the
-        // side-table write that does NOT pay the payload decode. In scan
-        // mode Catalyst pruning on the typed source gives that for free
-        // (the side write prunes to seqno+data, skipping the wire walk);
-        // in staged mode decodeRows goes through an RDD that is opaque
-        // to pruning, so the side table reads the staged bytes directly.
-        val (joined, rawForSide) = if (stagedByType) {
-          // decode this variant's bytes from its staging partition — the
-          // bags themselves are never re-read. bag_path narrows to the
-          // bags carrying THIS md5 variant (within a bag the md5 is
-          // unique per datatype, so bag_path fully disambiguates).
-          val bundle = MsgDefParser.parse(datatype, groupMsgDef)
-          val part = stageRead
-            .filter(col("datatype") === datatype && col("bag_path").isin(groupBags: _*))
-            .join(seqnoMap, Seq("bag_path", "chunk_idx", "offset"))
-            .select(col("seqno"), col("connection_id"), col("bag_path"), col("data"))
-          val decoded = decodeRows(spark, part, bundle)
-          (if (keepRawBlob) decoded else decoded.drop("data"), part)
-        } else {
-          val typed = spark.read.format("rosbag")
-            .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(groupBags))
-            .option("datatype", datatype).option("md5", md5)
-            .option("includeRaw", keepRawBlob.toString)
-            .load()
-          val payload = typed.columns.filterNot(Set(
-            "bag_path", "chunk_idx", "offset", "time_sec", "time_nsec",
-            "connection_id", "data"))
-          val frame = col("seqno") +: payload.map(col).toSeq :+
-            col("connection_id") :+ col("bag_path")
-          val j = typed
-            .join(seqnoMap, Seq("bag_path", "chunk_idx", "offset"))
-            .select((if (keepRawBlob) frame :+ col("data") else frame): _*)
-          (j, j)
+      // Connections dimension (reference FlattenedRosWriter.cpp:209-224),
+      // keyed (bag_path, connection_id) — connection ids are per-bag.
+      val connections = graft.ros.bag.RosbagTables.fromIndexes(spark, indexes)
+
+      // md5 consistency per datatype WITHIN each bag (reference
+      // FlattenedRosWriter.cpp:287 asserts per-bag).
+      indexes.foreach { case (b, index) =>
+        index.connections.groupBy(_.datatype).foreach { case (dt, cs) =>
+          require(cs.map(_.md5sum).distinct.size == 1,
+            s"datatype $dt has conflicting md5sums across connections in $b")
         }
-        val df =
+      }
+
+      // ACROSS bags a datatype may drift: one table per (datatype, md5)
+      // variant, definition = the message definition text
+      val typeGroups = EtlCore.nameVariants(
+        indexes.flatMap { case (b, index) =>
+          index.connections.map(c => (c.datatype, c.md5sum, c.msgDef, b))
+        }, naming, _.replace("/", "_")) // reference MessageTable.cpp:315
+
+      // ONE scan relation over the whole bag list (the "bags" option) —
+      // not an N-way union, which bloats the analyzer at fleet scale
+      val raw0 = spark.read.format("rosbag")
+        .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(bags)).load()
+      val raw = maxMessages.map(n => raw0.limit(n.toInt).toDF()).getOrElse(raw0)
+
+      // Stage the spine meta to parquet BEFORE the seqno operator. The
+      // range-partition seqno needs two passes over its input (bound
+      // sampling + shuffle write); run those against a kilobytes-per-
+      // million-rows parquet staging table instead of the bag source, so
+      // every bag chunk is read (and decompressed) exactly ONCE for the
+      // spine. Meta-only projection: the source's column pruning skips
+      // payload decode entirely. In stagedByType mode the same single
+      // pass ALSO stages the raw bytes partitioned by datatype — the
+      // only bag scan of the whole ETL.
+      val metaCols = Seq(col("bag_path"), col("chunk_idx"), col("offset"), col("time_sec"),
+        col("time_nsec"), col("size"), col("connection_id"),
+        col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
+      val stageRead =
+        if (stagedByType) EtlCore.stage(
+          raw.select(metaCols :+ col("datatype") :+ col("data"): _*), stageDir, Some("datatype"))
+        else EtlCore.stage(raw.select(metaCols: _*), stageDir)
+      jobs.lap("spine-stage-write")
+
+      // Exact payload bytes per (bag, connection) — one aggregate over
+      // the staged meta (kilobytes; no bag re-scan), run beside the seqno
+      // shuffle below. It sizes each per-type write by the bytes that
+      // type actually writes.
+      val connBytesF = jobs.async("connection bytes") {
+        stageRead.groupBy(col("bag_path"), col("connection_id"))
+          .agg(sum(col("size").cast("long")))
+          .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+      }
+
+      // Global seqno in merge-time order with storage-order tie-break —
+      // rosbag::View semantics (reference rosbag2parquet.cpp:45-52;
+      // seqno FlattenedRosWriter.cpp:195,256). The meta select prunes
+      // the staged blob pages out of the read in stagedByType mode.
+      // bag_path in the tie-break: rosbag::View merge-time order within a
+      // bag, deterministic (name-sorted) interleave across equal-time
+      // rows from different bags.
+      val spine = EtlCore.globalSeqno(stageRead.select(metaCols: _*),
+        Seq(col("time_sec"), col("time_nsec"), col("bag_path"), col("chunk_idx"), col("offset")),
+        seqnoOffset)
+
+      // Messages fact table (reference FlattenedRosWriter.cpp:49-87), plus
+      // the sensor-time header stamp (nullable; reference TODO
+      // rosbag2parquet.cpp:28-30) read in the source from the wire prefix.
+      val messages0 = spine.select(
+        col("seqno"), col("bag_path"), col("time_sec"), col("time_nsec"), col("size"),
+        col("connection_id"),
+        col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
+      val messages = if (nativeTimestamp)
+        messages0.withColumn("time",
+          EtlCore.ntzMicros("cast(time_sec as bigint) * 1000000 + time_nsec div 1000"))
+      else messages0
+
+      // Seqno map: (chunk_idx, offset) -> seqno, ints only — the blobs
+      // never ride a seqno shuffle. Each per-type table is a TYPED
+      // source read (decode happens inside the PartitionReader as
+      // InternalRows — no Row/encoder boxing) joined to the seqno map on
+      // the stable storage identity. The reference's route-by-type
+      // dispatch (FlattenedRosWriter.cpp:273-289) is the datatype option
+      // pushed into the source.
+      val seqnoMap = EtlCore.stage(
+        spine.select(col("bag_path"), col("chunk_idx"), col("offset"), col("seqno")), seqnoDir)
+      jobs.lap("seqno-map-write")
+      val connBytes = Await.result(connBytesF, Duration.Inf)
+      val (writeBudget, _) = graft.ros.PartitionPacking.budgetBytes(connBytes.values.sum)
+      val maxSplitBytes = spark.sessionState.conf.filesMaxPartitionBytes
+      def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / math.max(1L, b)
+
+      // one table per DATATYPE variant (two same-type connections may
+      // carry textually different but md5-equal definition strings)
+      val writes = typeGroups.map { v =>
+        // Write partitions sized by the bytes this table writes (exact,
+        // from the staged sizes) against the run's per-core budget — the
+        // reference cuts each table's row groups at a byte target too
+        // (TableBuffer.cpp:149-174). Floor: no task walks more chunk
+        // bytes than one Spark file split, so sparse types and slow
+        // codecs keep their scan parallelism (at roughly parallelism x
+        // maxPartitionBytes and above, this IS the scan's own packing).
+        // coalesce merges only ADJACENT scan partitions and never
+        // exceeds the count the scan planned.
+        val bagSet = v.files.toSet
+        val inGroupBags = indexes.filter { case (b, _) => bagSet(b) }
+        val typeBytes = inGroupBags.map { case (b, index) =>
+          index.connections.filter(c => c.datatype == v.name && c.md5sum == v.md5)
+            .map(c => connBytes.getOrElse((b, c.connId), 0L)).sum
+        }.sum
+        val walked = inGroupBags.map(_._2.chunks.map(_.uncompressedSize.toLong).sum).sum
+        val writeParts = math.max(1L, math.max(ceilDiv(typeBytes, writeBudget),
+          ceilDiv(walked, maxSplitBytes))).min(Int.MaxValue.toLong).toInt
+        EtlCore.TableWrite(s"per-type ${v.table}", () => {
+          // `joined`: the per-type frame. `rawForSide`: a lineage for the
+          // side-table write that does NOT pay the payload decode. In scan
+          // mode Catalyst pruning on the typed source gives that for free
+          // (the side write prunes to seqno+data, skipping the wire walk);
+          // in staged mode decodeRows goes through an RDD that is opaque
+          // to pruning, so the side table reads the staged bytes directly.
+          val (joined, rawForSide) = if (stagedByType) {
+            // decode this variant's bytes from its staging partition — the
+            // bags themselves are never re-read. bag_path narrows to the
+            // bags carrying THIS md5 variant (within a bag the md5 is
+            // unique per datatype, so bag_path fully disambiguates).
+            val part = stageRead
+              .filter(col("datatype") === v.name && col("bag_path").isin(v.files: _*))
+              .join(seqnoMap, Seq("bag_path", "chunk_idx", "offset"))
+              .select(col("seqno"), col("connection_id"), col("bag_path"), col("data"))
+            val decoded = decodeRows(spark, part, MsgDefParser.parse(v.name, v.definition))
+            (if (keepRawBlob) decoded else decoded.drop("data"), part)
+          } else {
+            val typed = spark.read.format("rosbag")
+              .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(v.files))
+              .option("datatype", v.name).option("md5", v.md5)
+              .option("includeRaw", keepRawBlob.toString)
+              .load()
+            val j = EtlCore.typedFrame(typed, seqnoMap, Seq("bag_path", "chunk_idx", "offset"),
+              Set("bag_path", "chunk_idx", "offset", "time_sec", "time_nsec", "connection_id"),
+              Seq("connection_id", "bag_path"), keepRawBlob)
+            (j, j)
+          }
           if (blobSideTable) {
             val (slim, sideFromJoined) = graft.multimodal.MultimodalOps
               .externalizeBlobs(joined, "data", "seqno", blobThreshold)
@@ -863,88 +300,14 @@ object BagEtl {
                 .filter(graft.multimodal.MultimodalOps.isBigBlob(col("data"), blobThreshold))
                 .select(col("seqno"), col("data"))
               else sideFromJoined
-            val sideNew = !append || !tableExists(s"$out/${tableName}_blobs.parquet")
-            side.coalesce(writeParts).write.mode(writeMode)
-              .option("compression", "snappy")
-              .parquet(s"$out/${tableName}_blobs.parquet")
-            if (sideNew)
-              ddl ++= VerticaDdl.createTable(tableName + "_blobs", side.schema) ++= "\n"
-            slim
-          } else joined
-        // DDL describes tables, not rows: appends to an existing table
-        // must not re-emit its CREATE statement
-        val tableNew = !append || !tableExists(s"$out/$tableName.parquet")
-        df.coalesce(writeParts).write.mode(writeMode)
-          .option("compression", "snappy").parquet(s"$out/$tableName.parquet")
-        if (tableNew)
-          ddl ++= VerticaDdl.createTable(tableName, df.schema) ++= "\n"
-        ddl.toString
+            EtlCore.writeTable(out, s"${v.table}_blobs", side.coalesce(writeParts), append) +
+              EtlCore.writeTable(out, v.table, slim.coalesce(writeParts), append)
+          } else EtlCore.writeTable(out, v.table, joined.coalesce(writeParts), append)
+        })
       }
+      EtlCore.Plan(messages, connections, typeGroups, writes)
     }
-    val ddl = new StringBuilder
-    try {
-      Await.result(messagesWrite.zip(Future.sequence(typeDdl)), Duration.Inf)
-        ._2.foreach(ddl ++= _)
-      lap("concurrent-writes")
-      // Connections (written last, after every other write succeeded)
-      // is the increment's COMMIT RECORD: runIncremental derives its
-      // done-set from Connections.bag_path alone, so a crash anywhere
-      // before this write leaves the work unrecorded and the next
-      // increment purges the dead attempt's rows and redoes those bags
-      // (repairCrashedIncrement).
-      connections.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Connections.parquet")
-      lap("connections-write")
-    } catch { case e: Throwable =>
-      // fail fast AND stop the siblings — AndFutureJobs so siblings
-      // between jobs can't keep submitting against the dirs the finally
-      // below deletes — then let every sibling unwind, so no write
-      // commits files after this run has failed (the caller's repair
-      // and redo would race it)
-      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-      (messagesWrite +: typeDdl).foreach(f => Await.ready(f, Duration.Inf))
-      throw e
-    } finally {
-      // drop the temp staging dirs even on failure (file:// and remote)
-      Seq(seqnoDir, stageDir).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).delete(p, true)
-      }
-    }
-    writeDdlFile(out, ddl.toString, append)
-
-    // manifest: naming history (incl. this run's groups) for future
-    // incremental appends
-    writeManifest(out, naming ++
-      typeGroups.map { case (dt, md5, _, _, name) => (dt, md5) -> name })
-
-    // info from the written Messages table (columnar) — not a bag
-    // re-scan; in append mode the slice covers only THIS run's bags
-    // (only the columns Info needs, by the schema this run wrote: no
-    // footer-inference job, and older appended files with a different
-    // column set still read)
-    val infoCols = StructType(Seq("bag_path", "seqno", "size", "data_crc32")
-      .map(messages.schema(_)))
-    val msgs0 = spark.read.schema(infoCols).parquet(s"$out/Messages.parquet")
-    val msgs = if (append) msgs0.filter(col("bag_path").isin(bags: _*)) else msgs0
-    val r = msgs
-      .agg(count(lit(1)), coalesce(sum(col("size").cast("long")), lit(0L)),
-        coalesce(expr("bit_xor(data_crc32)"), lit(0L)), max(col("seqno"))).head()
-    val (cnt, size, crc) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    // commit-record protocol, step 2: the dimension landed above, so
-    // the increment is committed — finalize the record with the new
-    // max. (A crash before this line resolves via inflight ⊆ done:
-    // repair recovers the max from the Messages footers.)
-    writeCommitRecord(out,
-      if (r.isNullAt(3)) seqnoOffset - 1
-      else math.max(seqnoOffset - 1, r.getLong(3)), Nil)
-    (Info(bagName, cnt, size, crc),
-      typeGroups.map { case (dt, md5, _, _, name) => (dt, md5, name) })
-  }
-
-  private def tableExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).exists(p)
+    Info(bagName, slice.count, slice.sizeBytes, slice.crcXor)
   }
 
   /** Per-table result of [[compact]]. `rewritten = false` means the
@@ -1066,41 +429,19 @@ object BagEtl {
     }
   }
 
-  /** Flattened per-type DataFrame from (seqno, connection_id, data)
-    * rows: seqno + flattened payload columns + connection_id + raw data
-    * blob (column frame per reference MessageTable.cpp:326-343; blob
-    * retention README.md:106).
+  /** Flattened per-type DataFrame from (seqno, connection_id,
+    * bag_path, data) rows: seqno + flattened payload columns +
+    * connection_id + bag_path + raw data blob ([[EtlCore.decodeRows]]).
+    * The reserved set is the typed source's (RosbagTypedRead.reserved)
+    * so the staged and per-type-scan ETL modes emit identical column
+    * names.
     */
-  def decodeRows(spark: SparkSession, part: DataFrame, bundle: RosMsgBundle): DataFrame = {
-    val flat = RosSchemaMapper.flatSchema(bundle)
-    // Payload fields may collide with the reserved frame columns (e.g.
-    // sensor_msgs/CompressedImage has a `data` field — the reference
-    // never hits this because it drops arrays). Reserved names win
-    // (reference compat); colliding payload columns get `_field`.
-    // Same set as the typed source (RosbagTypedRead.reserved) so the
-    // staged and per-type-scan ETL modes emit identical column names.
-    val reserved = Set("seqno", "connection_id", "data", "bag_path",
-      "chunk_idx", "offset", "time_sec", "time_nsec")
-    val payload = flat.fields.map(f =>
-      if (reserved(f.name)) f.copy(name = f.name + "_field") else f)
-    val outSchema = StructType(
-      StructField("seqno", LongType, nullable = false) +:
-      (payload :+
-        StructField("connection_id", IntegerType, nullable = false) :+
-        StructField("bag_path", StringType, nullable = false) :+
-        StructField("data", BinaryType, nullable = false)))
-    val rows = part
-      .select(col("seqno"), col("connection_id"), col("bag_path"), col("data"))
-      .rdd.map { r =>
-        val seqno = r.getLong(0)
-        val connId = r.getInt(1)
-        val bag = r.getString(2)
-        val bytes = r.getAs[Array[Byte]](3)
-        val vals = RosSchemaMapper.decode(bundle, bytes)
-        Row.fromSeq(seqno +: (vals :+ connId :+ bag :+ bytes))
-      }
-    spark.createDataFrame(rows, outSchema)
-  }
+  def decodeRows(spark: SparkSession, part: DataFrame, bundle: RosMsgBundle): DataFrame =
+    EtlCore.decodeRows(spark, part, RosSchemaMapper.flatSchema(bundle),
+      Set("seqno", "connection_id", "data", "bag_path", "chunk_idx", "offset",
+        "time_sec", "time_nsec"),
+      RosSchemaMapper.decode(bundle, _), Seq("connection_id", "bag_path"),
+      keepRawBlob = true)
 }
 
 /** Parquet/Spark schema → Vertica DDL (reference utils.h:99-136

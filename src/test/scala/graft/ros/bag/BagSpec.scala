@@ -149,7 +149,7 @@ class BagSpec extends SparkTestBase {
     assert(ddl.contains("header_frame_id VARCHAR(65000)"))
 
     // output-dir versioning (main.cpp:38-54)
-    assert(graft.ros.etl.BagEtl.versionedOutputDir(out) == s"$out.1")
+    assert(graft.ros.etl.EtlCore.versionedOutputDir(out) == s"$out.1")
   }
 
   test("stagedByType single-pass ETL produces tables identical to per-type scans") {

@@ -74,6 +74,21 @@ class RosbagTypedReadSpec extends SparkTestBase {
     assert(got.contains('�'))
   }
 
+  test("columnar string decode bound-checks the length prefix before reading") {
+    // `string s` whose length prefix claims 1 MiB over a 2-byte body:
+    // the zero-copy UTF-8 check must not read past the payload
+    val payload = Array[Byte](0, 0, 16, 0, 'a'.toByte, 'b'.toByte)
+    val conn = BagFormat.BagConnection(0, "/s", "test_msgs/S", "md5s", "string s\n", "/n")
+    val bag = java.nio.file.Files.createTempFile("overlong", ".bag")
+    java.nio.file.Files.write(bag, BagFormat.writeBag(Seq(conn),
+      Seq(BagFormat.WriteMessage(0, 1700000000, 0, payload)), messagesPerChunk = 4))
+    val df = spark.read.format("rosbag")
+      .option("datatype", "test_msgs/S").load(bag.toString)
+    assert(RosbagColumnarRead.supportsColumnar(df.select("s").schema))
+    val e = intercept[Exception](df.select("s").collect())
+    assert(causeMessages(e).contains("string length 1048576 overruns the 2 bytes left"))
+  }
+
   test("typed read of unknown datatype fails loudly") {
     val bag = graft.ros.etl.BagEtlMain.demoBag()
     val e = intercept[Exception] {

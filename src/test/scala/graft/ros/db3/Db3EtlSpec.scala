@@ -19,15 +19,20 @@ class Db3EtlSpec extends SparkTestBase {
     dir.toString
   }
 
+  /** `poisoned`: each String payload carries 8 trailing bytes — the
+    * spine (which never decodes payloads) reads fine, and only the
+    * String table's CDR decode fails.
+    */
   private def writeFixture(dir: java.io.File, fname: String, imuDef: String,
-      n: Int, t0: Long): Unit = {
+      n: Int, t0: Long, poisoned: Boolean = false): Unit = {
     val sb = Ros2Msg.bundle("sensor_msgs/msg/Imu", imuDef)
     val strB = Ros2Msg.bundle("std_msgs/msg/String", "string data")
     val dims = imuDef.linesIterator.count(_.trim.nonEmpty)
     val rows = (0 until n).map { i =>
       val data =
         if (i % 2 == 0) CdrCodec.encode(sb, (0 until dims).map(k => i + k / 10.0))
-        else CdrCodec.encode(strB, Seq(s"s$i"))
+        else CdrCodec.encode(strB, Seq(s"s$i")) ++
+          (if (poisoned) Array.fill[Byte](8)(0x7f) else Array.emptyByteArray)
       Seq[Any](null, if (i % 2 == 0) 1L else 2L, t0 + i, data)
     }
     val db = SqliteFormat.writeDb(Seq(
@@ -231,5 +236,40 @@ class Db3EtlSpec extends SparkTestBase {
       "orphan seqnos are gone; redo continues densely after the committed max")
     val msgs = spark.read.parquet(s"$out/Messages.parquet")
     assert(msgs.select("seqno").distinct().count() === msgs.count())
+  }
+
+  private def exists(path: String): Boolean = new java.io.File(path).exists()
+
+  test("a poisoned per-variant decode leaves no Topics; the crashed bootstrap's redo matches a clean run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_db3etl_poison").toFile
+    val out = freshOut("graft_db3etl_poison_out")
+    writeFixture(dir, "a.db3", "float64 x\nfloat64 y\n", 6, 100L, poisoned = true)
+    intercept[Exception](Db3Etl.runIncremental(spark, dir.getAbsolutePath, out))
+    assert(!exists(s"$out/Topics.parquet"))
+    assert(!exists(s"$out/_stage") && !exists(s"$out/_seqno"), "staging dirs dropped on failure")
+    writeFixture(dir, "a.db3", "float64 x\nfloat64 y\n", 6, 100L)
+    val redo = Db3Etl.runIncremental(spark, dir.getAbsolutePath, out)
+    val clean = freshOut("graft_db3etl_poison_clean")
+    val ref = Db3Etl.runIncremental(spark, dir.getAbsolutePath, clean)
+    assert(redo.messages === 6 && redo.messages === ref.messages && redo.tables === ref.tables)
+    graft.ros.etl.EtlRedoCheck.assertMatchesClean(spark, out, clean, "Topics")
+  }
+
+  test("a poisoned per-variant decode in an increment commits nothing; the redo is exactly-once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_db3etl_poison2").toFile
+    val out = freshOut("graft_db3etl_poison2_out")
+    writeFixture(dir, "a.db3", "float64 x\nfloat64 y\n", 6, 100L)
+    assert(Db3Etl.runIncremental(spark, dir.getAbsolutePath, out).messages === 6)
+    writeFixture(dir, "b.db3", "float64 x\nfloat64 y\n", 4, 200L, poisoned = true)
+    intercept[Exception](Db3Etl.runIncremental(spark, dir.getAbsolutePath, out))
+    val topicFiles = spark.read.parquet(s"$out/Topics.parquet").select("file_path")
+      .distinct().collect().map(_.getString(0).split('/').last).toSeq
+    assert(topicFiles === Seq("a.db3"), "the failed increment is not committed")
+    assert(!exists(s"$out/_stage") && !exists(s"$out/_seqno"), "staging dirs dropped on failure")
+    writeFixture(dir, "b.db3", "float64 x\nfloat64 y\n", 4, 200L)
+    assert(Db3Etl.runIncremental(spark, dir.getAbsolutePath, out).messages === 4)
+    val clean = freshOut("graft_db3etl_poison2_clean")
+    assert(Db3Etl.runIncremental(spark, dir.getAbsolutePath, clean).messages === 10)
+    graft.ros.etl.EtlRedoCheck.assertMatchesClean(spark, out, clean, "Topics")
   }
 }

@@ -93,11 +93,11 @@ class EtlCommitRecordSpec extends SparkTestBase {
     val out = freshOut("graft_cr_steady_out")
     assert(BagEtl.runIncremental(spark, dir.toString, out).count == 3)
     // the record was finalized by the increment
-    assert(BagEtl.readCommitRecord(out).contains((2L, Seq.empty[String])))
+    assert(EtlCore.readCommitRecord(out).contains((2L, Seq.empty[String])))
     val done = spark.read.parquet(s"$out/Connections.parquet")
       .select(col("bag_path")).distinct().collect().map(_.getString(0)).toSet
     val jobs = countJobs {
-      val m = BagEtl.repairCrashedIncrement(spark, out, "bag_path", done,
+      val m = EtlCore.repairCrashedIncrement(spark, out, "bag_path", done,
         dimension = "Connections")
       assert(m === 2L)
     }
@@ -114,7 +114,7 @@ class EtlCommitRecordSpec extends SparkTestBase {
     Files.deleteIfExists(Paths.get(s"$out/_commit.json"))
     addBag(dir, "b.bag", 1700000100)
     assert(BagEtl.runIncremental(spark, dir.toString, out).count == 3)
-    assert(BagEtl.readCommitRecord(out).contains((5L, Seq.empty[String])))
+    assert(EtlCore.readCommitRecord(out).contains((5L, Seq.empty[String])))
     val m = spark.read.parquet(s"$out/Messages.parquet")
     assert(m.count() === 6 && m.select("seqno").distinct().count() === 6)
   }
@@ -131,10 +131,10 @@ class EtlCommitRecordSpec extends SparkTestBase {
     val bPath = spark.read.parquet(s"$out/Connections.parquet")
       .filter(col("bag_path").endsWith("b.bag"))
       .select("bag_path").head().getString(0)
-    BagEtl.writeCommitRecord(out, 2L, Seq(bPath))
+    EtlCore.writeCommitRecord(out, 2L, Seq(bPath))
     // quiescent redo: nothing re-converted, max recovered, record fixed
     assert(BagEtl.runIncremental(spark, dir.toString, out).count == 0)
-    assert(BagEtl.readCommitRecord(out).contains((5L, Seq.empty[String])))
+    assert(EtlCore.readCommitRecord(out).contains((5L, Seq.empty[String])))
     val m = spark.read.parquet(s"$out/Messages.parquet")
     assert(m.count() === 6 && m.agg(max(col("seqno"))).head().getLong(0) === 5L)
   }
@@ -155,18 +155,18 @@ class EtlCommitRecordSpec extends SparkTestBase {
       .withColumn("seqno", col("seqno") + lit(100L))
     orphanMsg.write.mode(org.apache.spark.sql.SaveMode.Append)
       .parquet(s"$out/Messages.parquet")
-    BagEtl.writeCommitRecord(out, 2L, Seq(s"$dir/ghost.bag"))
+    EtlCore.writeCommitRecord(out, 2L, Seq(s"$dir/ghost.bag"))
     val done = spark.read.parquet(s"$out/Connections.parquet")
       .select(col("bag_path")).distinct().collect().map(_.getString(0)).toSet
     val jobs = countJobs {
-      val m = BagEtl.repairCrashedIncrement(spark, out, "bag_path", done,
+      val m = EtlCore.repairCrashedIncrement(spark, out, "bag_path", done,
         dimension = "Connections")
       assert(m === 2L)
     }
     assert(jobs === 0, s"footer purge launched $jobs Spark job(s)")
     assert(spark.read.parquet(imu).count() === 3)
     assert(spark.read.parquet(s"$out/Messages.parquet").count() === 3)
-    assert(BagEtl.readCommitRecord(out).contains((2L, Seq.empty[String])))
+    assert(EtlCore.readCommitRecord(out).contains((2L, Seq.empty[String])))
   }
 
   test("purge that empties a table preserves its schema (no unreadable bare dir)") {
@@ -178,10 +178,10 @@ class EtlCommitRecordSpec extends SparkTestBase {
     val side = s"$out/ghost_table.parquet"
     spark.read.parquet(s"$out/Messages.parquet")
       .withColumn("seqno", col("seqno") + lit(100L)).write.parquet(side)
-    BagEtl.writeCommitRecord(out, 2L, Seq(s"$dir/ghost.bag"))
+    EtlCore.writeCommitRecord(out, 2L, Seq(s"$dir/ghost.bag"))
     val done = spark.read.parquet(s"$out/Connections.parquet")
       .select(col("bag_path")).distinct().collect().map(_.getString(0)).toSet
-    BagEtl.repairCrashedIncrement(spark, out, "bag_path", done, "Connections")
+    EtlCore.repairCrashedIncrement(spark, out, "bag_path", done, "Connections")
     val t = spark.read.parquet(side)   // must not throw "unable to infer schema"
     assert(t.count() === 0)
     assert(t.columns.contains("seqno"))
@@ -201,7 +201,7 @@ class EtlCommitRecordSpec extends SparkTestBase {
     Files.move(imu, Paths.get(s"$out/sensor_msgs_Imu.parquet__old"))
     val done = spark.read.parquet(s"$out/Connections.parquet")
       .select(col("bag_path")).distinct().collect().map(_.getString(0)).toSet
-    BagEtl.repairCrashedIncrement(spark, out, "bag_path", done, "Connections")
+    EtlCore.repairCrashedIncrement(spark, out, "bag_path", done, "Connections")
     assert(Files.exists(imu), "original table restored from the aside dir")
     assert(!Files.exists(Paths.get(s"$out/sensor_msgs_Imu.parquet__old")))
     assert(spark.read.parquet(imu.toString).count() === 3)
@@ -216,14 +216,14 @@ class EtlCommitRecordSpec extends SparkTestBase {
     val hostile = Seq(
       "/data/rec[2].bag", "/data/a]b.bag", "/d/x\"y.bag",
       "/d/back\\slash.bag", "/d/new\nline.bag", "/d/plain.bag")
-    BagEtl.writeCommitRecord(out, 7L, hostile)
-    assert(BagEtl.readCommitRecord(out).contains((7L, hostile)))
+    EtlCore.writeCommitRecord(out, 7L, hostile)
+    assert(EtlCore.readCommitRecord(out).contains((7L, hostile)))
     // the record stays one line (offset-log-grade escaping)
     val body = new String(Files.readAllBytes(Paths.get(s"$out/_commit.json")),
       java.nio.charset.StandardCharsets.UTF_8)
     assert(!body.contains('\n'))
     // unterminated array (half-written record) is rejected, not misread
-    assert(BagEtl.extractInflightBody("""{"committed":1,"inflight":["/a""").isEmpty)
+    assert(EtlCore.extractInflightBody("""{"committed":1,"inflight":["/a""").isEmpty)
   }
 
   test("a per-type write failing beside Messages leaves no Connections.parquet") {
@@ -236,6 +236,22 @@ class EtlCommitRecordSpec extends SparkTestBase {
       "staging dirs dropped on failure")
   }
 
+  test("a crashed bootstrap's redo purges the dead attempt and matches a clean run") {
+    val dir = Files.createTempDirectory("graft_cr_bootredo")
+    addMixedBag(dir, "a.bag", 1700000000, poisoned = true)
+    val out = freshOut("graft_cr_bootredo_out")
+    intercept[Exception](BagEtl.runIncremental(spark, dir.toString, out))
+    // nothing committed, the bag still in flight
+    assert(EtlCore.readCommitRecord(out)
+      .exists { case (c, fl) => c == -1L && fl.map(_.split('/').last) == Seq("a.bag") })
+    addMixedBag(dir, "a.bag", 1700000000, poisoned = false)
+    val redo = BagEtl.runIncremental(spark, dir.toString, out)
+    val clean = freshOut("graft_cr_bootredo_clean")
+    assert(redo.count === BagEtl.runIncremental(spark, dir.toString, clean).count)
+    EtlRedoCheck.assertMatchesClean(spark, out, clean, "Connections")
+    assert(EtlCore.readCommitRecord(out).contains((3L, Seq.empty[String])))
+  }
+
   test("a per-type write failing beside Messages commits nothing; the redo is exactly-once") {
     val dir = Files.createTempDirectory("graft_cr_midfail")
     addBag(dir, "a.bag", 1700000000)
@@ -245,7 +261,7 @@ class EtlCommitRecordSpec extends SparkTestBase {
     intercept[Exception](BagEtl.runIncremental(spark, dir.toString, out))
     // the commit record names only a.bag; the increment is still in flight
     assert(connectionBags(out).map(_.split('/').last) === Seq("a.bag"))
-    assert(BagEtl.readCommitRecord(out)
+    assert(EtlCore.readCommitRecord(out)
       .exists { case (c, fl) => c == 2L && fl.map(_.split('/').last) == Seq("b.bag") })
     // redo with the bag repaired: whatever the dead attempt left in
     // Messages or the IMU table is purged before b.bag is converted again
@@ -259,7 +275,7 @@ class EtlCommitRecordSpec extends SparkTestBase {
       m.getLong(3) === 6L)
     assert(spark.read.parquet(s"$out/sensor_msgs_Imu.parquet").count() === 5)
     assert(spark.read.parquet(s"$out/std_msgs_String.parquet").count() === 2)
-    assert(BagEtl.readCommitRecord(out).contains((6L, Seq.empty[String])))
+    assert(EtlCore.readCommitRecord(out).contains((6L, Seq.empty[String])))
   }
 
   test("footer ranges: per-file min/max match a Spark scan") {
@@ -269,12 +285,12 @@ class EtlCommitRecordSpec extends SparkTestBase {
     val out = freshOut("graft_cr_foot_out")
     BagEtl.runIncremental(spark, dir.toString, out)
     val msgs = s"$out/Messages.parquet"
-    val viaFooter = BagEtl.footerSeqnoRanges(msgs)
+    val viaFooter = EtlCore.footerSeqnoRanges(msgs)
     assert(viaFooter.isDefined && viaFooter.get.isRight)
     val ranges = viaFooter.get.toOption.get
     assert(ranges.nonEmpty)
     assert(ranges.map(_._2).min === 0L && ranges.map(_._3).max === 5L)
     // a dimension-shaped dir (no seqno) reports None
-    assert(BagEtl.footerSeqnoRanges(s"$out/Connections.parquet").isEmpty)
+    assert(EtlCore.footerSeqnoRanges(s"$out/Connections.parquet").isEmpty)
   }
 }

@@ -92,7 +92,7 @@ class EtlLayoutSpec extends SparkTestBase {
     assert(etlInfo.count === nMessages)
     val files = dataFiles("Messages")
     assert(files.size <= spark.sessionState.conf.numShufflePartitions)
-    val ranges = BagEtl.footerSeqnoRanges(s"$out/Messages.parquet").get.toOption.get
+    val ranges = EtlCore.footerSeqnoRanges(s"$out/Messages.parquet").get.toOption.get
       .sortBy(r => new org.apache.hadoop.fs.Path(r._1).getName)
     assert(ranges.size === files.size)
     ranges.sliding(2).foreach {

@@ -196,9 +196,12 @@ class McapSpec extends SparkTestBase {
   private val imuText = "float64 ax\nfloat64 ay"
   private val imuText2 = "float64 ax\nfloat64 ay\nfloat64 az" // drifted variant
   private val strText = "string data"
-  /** A 2-channel (imu + chatter) fixture file for the ETL tests. */
+  /** A 2-channel (imu + chatter) fixture file for the ETL tests.
+    * `poisoned`: each chatter payload carries 8 trailing bytes — only
+    * the String table's CDR decode fails.
+    */
   private def writeEtlFixture(dir: java.io.File, name: String, imuDef: String,
-                              n: Int, t0: Long = 100L): Unit = {
+                              n: Int, t0: Long = 100L, poisoned: Boolean = false): Unit = {
     val schemas = Seq(McapSchema(1, "sensor_msgs/msg/Imu", "ros2msg", imuDef.getBytes("UTF-8")),
       McapSchema(2, "std_msgs/msg/String", "ros2msg", strText.getBytes("UTF-8")))
     val channels = Seq(McapChannel(1, 1, "/imu", "cdr"), McapChannel(2, 2, "/chatter", "cdr"))
@@ -207,7 +210,8 @@ class McapSpec extends SparkTestBase {
     val msgs = (0 until n).map { i =>
       if (i % 2 == 0) McapMessage(1, i.toLong, t0 + i, t0 + i, CdrCodec.encode(ib,
         if (imuDef == imuText) Seq(1.0 * i, 2.0 * i) else Seq(1.0 * i, 2.0 * i, 3.0 * i)))
-      else McapMessage(2, i.toLong, t0 + i, t0 + i, CdrCodec.encode(sb, Seq(s"m$i")))
+      else McapMessage(2, i.toLong, t0 + i, t0 + i, CdrCodec.encode(sb, Seq(s"m$i")) ++
+        (if (poisoned) Array.fill[Byte](8)(0x7f) else Array.emptyByteArray))
     }
     val out = new java.io.FileOutputStream(new java.io.File(dir, name))
     try out.write(writeMcap(schemas, channels, msgs, "zstd")) finally out.close()
@@ -495,6 +499,43 @@ class McapSpec extends SparkTestBase {
     // third call: nothing new
     val third = McapEtl.runIncremental(spark, dir.getAbsolutePath, outDir)
     assert(third.messages == 0 && third.tables.isEmpty)
+  }
+
+  private def exists(path: String): Boolean = new java.io.File(path).exists()
+
+  test("McapEtl: a poisoned per-variant decode leaves no Channels; the crashed bootstrap's redo matches a clean run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mcap_poison").toFile
+    val outDir = freshOut("graft_mcap_poison_out")
+    writeEtlFixture(dir, "a.mcap", imuText, 6, poisoned = true)
+    intercept[Exception](McapEtl.runIncremental(spark, dir.getAbsolutePath, outDir))
+    assert(!exists(s"$outDir/Channels.parquet"))
+    assert(!exists(s"$outDir/_spine") && !exists(s"$outDir/_seqno"),
+      "staging dirs dropped on failure")
+    writeEtlFixture(dir, "a.mcap", imuText, 6)
+    val redo = McapEtl.runIncremental(spark, dir.getAbsolutePath, outDir)
+    val clean = freshOut("graft_mcap_poison_clean")
+    val ref = McapEtl.runIncremental(spark, dir.getAbsolutePath, clean)
+    assert(redo.messages == 6 && redo.messages == ref.messages && redo.tables == ref.tables)
+    graft.ros.etl.EtlRedoCheck.assertMatchesClean(spark, outDir, clean, "Channels")
+  }
+
+  test("McapEtl: a poisoned per-variant decode in an increment commits nothing; the redo is exactly-once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mcap_poison2").toFile
+    val outDir = freshOut("graft_mcap_poison2_out")
+    writeEtlFixture(dir, "a.mcap", imuText, 6, t0 = 100L)
+    assert(McapEtl.runIncremental(spark, dir.getAbsolutePath, outDir).messages == 6)
+    writeEtlFixture(dir, "b.mcap", imuText, 4, t0 = 200L, poisoned = true)
+    intercept[Exception](McapEtl.runIncremental(spark, dir.getAbsolutePath, outDir))
+    val chanFiles = spark.read.parquet(s"$outDir/Channels.parquet").select("file_path")
+      .distinct().collect().map(_.getString(0).split('/').last).toSeq
+    assert(chanFiles == Seq("a.mcap"), "the failed increment is not committed")
+    assert(!exists(s"$outDir/_spine") && !exists(s"$outDir/_seqno"),
+      "staging dirs dropped on failure")
+    writeEtlFixture(dir, "b.mcap", imuText, 4, t0 = 200L)
+    assert(McapEtl.runIncremental(spark, dir.getAbsolutePath, outDir).messages == 4)
+    val clean = freshOut("graft_mcap_poison2_clean")
+    assert(McapEtl.runIncremental(spark, dir.getAbsolutePath, clean).messages == 10)
+    graft.ros.etl.EtlRedoCheck.assertMatchesClean(spark, outDir, clean, "Channels")
   }
 
   test("McapEtl stagedBySchema single-pass mode emits tables identical to the re-scan mode") {
