@@ -101,7 +101,14 @@ object BagFormat {
   private val MaxHeaderLen = 1 << 26
   private val MaxDataLen = 1 << 30
 
-  def readRecord(in: DataInputStream): Option[Record] = {
+  def readRecord(in: DataInputStream): Option[Record] = readRecordWith(in, _ => true).map(_._1)
+
+  /** [[readRecord]] that reads a record's data only when `keep(header)`
+    * and skips it otherwise (the record then carries no data), returning
+    * the data length beside the record. Same length guards either way.
+    */
+  private def readRecordWith(in: DataInputStream, keep: Map[String, Array[Byte]] => Boolean)
+      : Option[(Record, Int)] = {
     val first = in.read()
     if (first < 0) return None
     val hlenBytes = new Array[Byte](4)
@@ -110,7 +117,7 @@ object BagFormat {
     val hlen = ByteBuffer.wrap(hlenBytes).order(ByteOrder.LITTLE_ENDIAN).getInt()
     require(hlen >= 0 && hlen <= MaxHeaderLen,
       s"corrupt bag: record header length $hlen out of range")
-    val header = new Array[Byte](hlen); in.readFully(header)
+    val headerBytes = new Array[Byte](hlen); in.readFully(headerBytes)
     val dlen = readU32(in)
     require(dlen >= 0, s"corrupt bag: negative record data length $dlen")
     // not necessarily corrupt — a writer CAN be configured with >=1 GiB
@@ -118,8 +125,27 @@ object BagFormat {
     // corrupt file turns into an OOM, so name the limit honestly
     require(dlen <= MaxDataLen,
       s"record data length $dlen exceeds the 1 GiB reader limit (BagFormat.MaxDataLen)")
-    val data = new Array[Byte](dlen); in.readFully(data)
-    Some(Record(parseHeader(header), data, 8L + hlen + dlen))
+    val header = parseHeader(headerBytes)
+    val data =
+      if (keep(header)) { val d = new Array[Byte](dlen); in.readFully(d); d }
+      else { skipFully(in, dlen); Array.emptyByteArray }
+    Some((Record(header, data, 8L + hlen + dlen), dlen))
+  }
+
+  /** Skip exactly `n` bytes or throw EOFException. `skip` may stop
+    * short, and on some streams (FileInputStream) runs past the end
+    * without complaint — so the LAST byte is read, which proves the
+    * record is complete (a truncated tail must stay a clean stop).
+    */
+  private def skipFully(in: InputStream, n: Int): Unit = if (n > 0) {
+    var left = n.toLong - 1
+    while (left > 0) {
+      val s = in.skip(left)
+      if (s > 0) left -= s
+      else if (in.read() < 0) throw new java.io.EOFException()
+      else left -= 1
+    }
+    if (in.read() < 0) throw new java.io.EOFException()
   }
 
   private def readU32(in: DataInputStream): Int = {
@@ -127,9 +153,13 @@ object BagFormat {
     ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt()
   }
 
-  /** One pass over the whole file: connections + chunk positions.
-    * Connections may appear inside chunks or in the trailing index
-    * section; both are collected (id-deduplicated).
+  /** One pass over the file's record HEADERS: connections + chunk
+    * positions. Connections may appear inside chunks or in the trailing
+    * index section; both are collected (id-deduplicated). The data of
+    * compressed chunks (and of index-data and bag-header records) is
+    * skipped, not read: the driver builds the index from a few bytes
+    * per chunk instead of streaming the whole bag. Uncompressed chunk
+    * bodies are still read, for their inline connection records.
     */
   def scanIndex(open: () => InputStream): BagIndex = {
     val in = new DataInputStream(new java.io.BufferedInputStream(open()))
@@ -144,20 +174,27 @@ object BagFormat {
       val chunks = scala.collection.mutable.ArrayBuffer[BagChunk]()
       val chunkTimes = scala.collection.mutable.HashMap[Long,
         ((Int, Int), (Int, Int), Option[Seq[(Int, Int)]])]()
+      def needsData(header: Map[String, Array[Byte]]): Boolean =
+        header.get("op").filter(_.nonEmpty).map(_(0)) match {
+          case Some(OpConnection) | Some(OpChunkInfo) => true
+          case Some(OpChunk) => header.get("compression")
+            .exists(c => new String(c, StandardCharsets.UTF_8) == "none")
+          case _ => false
+        }
       // A bag being actively appended may end mid-record; treat that as
       // "no more complete records" (the next scan sees the finished
       // record) rather than failing the whole index scan.
-      def nextComplete(): Option[Record] =
-        try readRecord(in) catch { case _: java.io.EOFException => None }
+      def nextComplete(): Option[(Record, Int)] =
+        try readRecordWith(in, needsData) catch { case _: java.io.EOFException => None }
       var rec = nextComplete()
       while (rec.isDefined) {
-        val r = rec.get
+        val (r, dataLength) = rec.get
         r.op match {
           case OpChunk =>
             // header portion = wireLen minus the two u32 prefixes and data
-            val dataOffset = pos + (r.wireLen - r.data.length)
+            val dataOffset = pos + (r.wireLen - dataLength)
             val compression = r.str("compression")
-            chunks += BagChunk(pos, compression, r.u32("size"), dataOffset, r.data.length)
+            chunks += BagChunk(pos, compression, r.u32("size"), dataOffset, dataLength)
             // embedded connection records are collected inline only for
             // uncompressed chunks — inflating every chunk during the
             // (driver-side) index scan would decompress the whole bag
@@ -199,10 +236,10 @@ object BagFormat {
   }
 
   private def collectChunkConnections(chunkData: Array[Byte],
-      conns: scala.collection.mutable.LinkedHashMap[Int, BagConnection]): Unit =
-    foreachChunkRecord(chunkData) { r =>
-      if (r.op == OpConnection) addConnection(r, conns)
-    }
+      conns: scala.collection.mutable.LinkedHashMap[Int, BagConnection]): Unit = {
+    val w = new ChunkWalk(chunkData)
+    while (w.next()) if (w.op == OpConnection) addConnection(w.record(), conns)
+  }
 
   private def addConnection(r: Record,
       conns: scala.collection.mutable.LinkedHashMap[Int, BagConnection]): Unit = {
@@ -219,36 +256,122 @@ object BagFormat {
     }
   }
 
-  /** Iterate the records embedded in (uncompressed) chunk data. */
-  def foreachChunkRecord(chunkData: Array[Byte])(f: Record => Unit): Unit = {
-    val in = new DataInputStream(new java.io.ByteArrayInputStream(chunkData))
-    var rec = readRecord(in)
-    while (rec.isDefined) { f(rec.get); rec = readRecord(in) }
-  }
-
   final case class BagMessage(connId: Int, timeSec: Int, timeNsec: Int,
                               offsetInChunk: Int, data: Array[Byte])
 
   /** Messages of one chunk, in storage order, with their offset (the
-    * in-chunk tiebreak for seqno).
+    * in-chunk tiebreak for seqno) — every payload copied out; the
+    * readers walk with [[ChunkWalk]] and copy only what they keep.
     */
   def chunkMessages(chunk: BagChunk, chunkData: Array[Byte]): Seq[BagMessage] = {
-    val body = decompressChunk(chunk.compression, chunkData, chunk.uncompressedSize)
+    val w = new ChunkWalk(decompressChunk(chunk.compression, chunkData, chunk.uncompressedSize))
     val out = scala.collection.mutable.ArrayBuffer[BagMessage]()
-    val in = new DataInputStream(new java.io.ByteArrayInputStream(body))
-    var off = 0
-    var rec = readRecord(in)
-    while (rec.isDefined) {
-      val r = rec.get
-      if (r.op == OpMessageData) {
-        val (sec, nsec) = r.time("time")
-        out += BagMessage(r.u32("conn"), sec, nsec, off, r.data)
-      }
-      off += r.wireLen.toInt
-      rec = readRecord(in)
-    }
+    while (w.nextMessage()) out += BagMessage(w.conn, w.timeSec, w.timeNsec, w.offset, w.data())
     out.toSeq
   }
+
+  /** In-place cursor over the records of one UNCOMPRESSED chunk body —
+    * the chunk walk every bag reader shares. Each record header is
+    * parsed where it lies (op, conn and time read straight from the
+    * field bytes: no stream, no header map, no header copy), and a
+    * payload is copied only when the caller asks ([[data]]); the
+    * columnar readers decode straight from [[body]]. Field semantics
+    * are [[parseHeader]]'s (any field order, a repeated field's last
+    * value wins) and every length is bound-checked against the body in
+    * the subtraction form, so a forged length fails as "corrupt bag".
+    */
+  final class ChunkWalk(val body: Array[Byte]) {
+    private var nextPos = 0
+    private var headerEnd = 0
+    /** The current record's start in the body — a message's offset. */
+    var offset = 0
+    var op: Byte = 0
+    var conn = 0
+    var timeSec = 0
+    var timeNsec = 0
+    /** The current record's data: `body[dataOff, dataOff + dataLen)`. */
+    var dataOff = 0
+    var dataLen = 0
+
+    /** Advance to the next record of any kind; false at the body's end. */
+    def next(): Boolean = {
+      if (nextPos >= body.length) return false
+      offset = nextPos
+      val hlen = length(offset, body.length, "header")
+      headerEnd = offset + 4 + hlen
+      dataLen = length(headerEnd, body.length, "data")
+      dataOff = headerEnd + 4
+      nextPos = dataOff + dataLen
+      parseFields(offset + 4, headerEnd)
+      true
+    }
+
+    /** Advance to the next message-data record. */
+    def nextMessage(): Boolean = {
+      while (next()) if (op == OpMessageData) return true
+      false
+    }
+
+    /** A copy of the current record's data. */
+    def data(): Array[Byte] = java.util.Arrays.copyOfRange(body, dataOff, dataOff + dataLen)
+
+    /** The current record as a parsed [[Record]] (header map + data copy). */
+    def record(): Record = Record(
+      parseHeader(java.util.Arrays.copyOfRange(body, offset + 4, headerEnd)), data(),
+      (nextPos - offset).toLong)
+
+    /** A u32 length prefix at `at` whose span must end by `end`. */
+    private def length(at: Int, end: Int, what: String): Int = {
+      require(end - at >= 4,
+        s"corrupt bag: record $what length at chunk offset $at overruns the record")
+      val n = RosbagDataSource.leInt(body, at)
+      require(n >= 0 && n <= end - at - 4,
+        s"corrupt bag: record $what length $n at chunk offset $at overruns the record")
+      n
+    }
+
+    private def nameIs(from: Int, len: Int, name: Array[Byte]): Boolean =
+      len == name.length && {
+        var i = 0
+        while (i < len && body(from + i) == name(i)) i += 1
+        i == len
+      }
+
+    private def parseFields(from: Int, until: Int): Unit = {
+      var p = from
+      var sawOp = false
+      var sawConn = false
+      var sawTime = false
+      while (p < until) {
+        val flen = length(p, until, "header field")
+        val f = p + 4
+        val fEnd = f + flen
+        var eq = f
+        while (eq < fEnd && body(eq) != '='.toByte) eq += 1
+        require(eq > f && eq < fEnd, "malformed bag header field")
+        val v = eq + 1
+        val vLen = fEnd - v
+        if (nameIs(f, eq - f, OpName)) {
+          require(vLen >= 1, "corrupt bag: empty op field")
+          op = body(v); sawOp = true
+        } else if (nameIs(f, eq - f, ConnName)) {
+          require(vLen >= 4, s"corrupt bag: conn field of $vLen bytes")
+          conn = RosbagDataSource.leInt(body, v); sawConn = true
+        } else if (nameIs(f, eq - f, TimeName)) {
+          require(vLen >= 8, s"corrupt bag: time field of $vLen bytes")
+          timeSec = RosbagDataSource.leInt(body, v)
+          timeNsec = RosbagDataSource.leInt(body, v + 4); sawTime = true
+        }
+        p = fEnd
+      }
+      require(sawOp, s"corrupt bag: record at chunk offset $offset has no op field")
+      require(op != OpMessageData || (sawConn && sawTime),
+        s"corrupt bag: message record at chunk offset $offset lacks conn or time")
+    }
+  }
+  private val OpName = "op".getBytes(StandardCharsets.US_ASCII)
+  private val ConnName = "conn".getBytes(StandardCharsets.US_ASCII)
+  private val TimeName = "time".getBytes(StandardCharsets.US_ASCII)
 
   /** Inflate a chunk body per its declared compression. The chunk
     * header's `size` field is the uncompressed length (bag v2.0 spec),

@@ -228,60 +228,54 @@ class RosbagMetaColumnarReader(p: RosbagInputPartition, required: StructType,
   private val pathBytes: Array[Byte] =
     p.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  private def stamp(m: BagFormat.BagMessage, v: OnHeapColumnVector, off: Int): Unit =
-    if (connHasHeader(m.connId) && m.data.length >= 12)
-      v.appendInt(RosbagDataSource.leInt(m.data, off))
+  // every writer reads the cursor's current record in place: no
+  // payload copy (appendByteArray copies straight from the chunk body)
+  private val cursor = new ChunkCursor(p, filters, limit, ChunkCursor.knownConn(p))
+  private def w = cursor.walk
+
+  private def stamp(v: OnHeapColumnVector, off: Int): Unit =
+    if (connHasHeader(w.conn) && w.dataLen >= 12)
+      v.appendInt(RosbagDataSource.leInt(w.body, w.dataOff + off))
     else v.appendNull()
 
-  private val writers: Array[BagFormat.BagMessage => Unit] =
+  private val writers: Array[() => Unit] =
     required.fields.zipWithIndex.map { case (f, i) =>
       val v = vectors(i)
       f.name match {
-        case "bag_path" => (_: BagFormat.BagMessage) =>
-          v.appendByteArray(pathBytes, 0, pathBytes.length)
-        case "chunk_idx" => (_: BagFormat.BagMessage) => v.appendInt(p.chunkIdx)
-        case "offset" => (m: BagFormat.BagMessage) => v.appendInt(m.offsetInChunk)
-        case "time_sec" => (m: BagFormat.BagMessage) => v.appendInt(m.timeSec)
-        case "time_nsec" => (m: BagFormat.BagMessage) => v.appendInt(m.timeNsec)
-        case "size" => (m: BagFormat.BagMessage) => v.appendInt(m.data.length)
-        case "connection_id" => (m: BagFormat.BagMessage) => v.appendInt(m.connId)
-        case "topic" => (m: BagFormat.BagMessage) => {
-          val b = topicBytes(m.connId); v.appendByteArray(b, 0, b.length) }
-        case "datatype" => (m: BagFormat.BagMessage) => {
-          val b = datatypeBytes(m.connId); v.appendByteArray(b, 0, b.length) }
-        case "header_stamp_sec" => (m: BagFormat.BagMessage) => stamp(m, v, 4)
-        case "header_stamp_nsec" => (m: BagFormat.BagMessage) => stamp(m, v, 8)
-        case "data_crc32" => (m: BagFormat.BagMessage) =>
-          v.appendLong(RosbagDataSource.crc32(m.data))
-        case "data" => (m: BagFormat.BagMessage) =>
-          v.appendByteArray(m.data, 0, m.data.length)
+        case "bag_path" => () => v.appendByteArray(pathBytes, 0, pathBytes.length)
+        case "chunk_idx" => () => v.appendInt(p.chunkIdx)
+        case "offset" => () => v.appendInt(w.offset)
+        case "time_sec" => () => v.appendInt(w.timeSec)
+        case "time_nsec" => () => v.appendInt(w.timeNsec)
+        case "size" => () => v.appendInt(w.dataLen)
+        case "connection_id" => () => v.appendInt(w.conn)
+        case "topic" => () => {
+          val b = topicBytes(w.conn); v.appendByteArray(b, 0, b.length) }
+        case "datatype" => () => {
+          val b = datatypeBytes(w.conn); v.appendByteArray(b, 0, b.length) }
+        case "header_stamp_sec" => () => stamp(v, 4)
+        case "header_stamp_nsec" => () => stamp(v, 8)
+        case "data_crc32" => () =>
+          v.appendLong(RosbagDataSource.crc32(w.body, w.dataOff, w.dataLen))
+        case "data" => () => v.appendByteArray(w.body, w.dataOff, w.dataLen)
       }
     }
   private val dataRequired = required.fieldNames.contains("data")
-
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    val all = BagFormat.chunkMessages(p.chunk, data).iterator
-    val filtered = all.filter { m =>
-      val conn = p.conns.getOrElse(m.connId,
-        throw new IllegalStateException(s"message references unknown connection ${m.connId}"))
-      filters.forall(f => RosbagFilters.eval(f, m, conn, p.path))
-    }
-    if (limit >= 0) filtered.take(limit) else filtered
-  }
+  private var pending = false   // a kept message the last batch had no room for
 
   override def next(): Boolean = {
-    if (!messages.hasNext) return false
+    if (!pending && !cursor.next()) return false
     var i = 0
     while (i < vectors.length) { vectors(i).reset(); i += 1 }
     var n = 0
     var bytes = 0L
-    while (n < batchSize && bytes < batchBytes && messages.hasNext) {
-      val m = messages.next()
-      if (dataRequired) bytes += m.data.length
+    pending = true
+    while (pending && n < batchSize && bytes < batchBytes) {
+      if (dataRequired) bytes += w.dataLen
       var j = 0
-      while (j < writers.length) { writers(j)(m); j += 1 }
+      while (j < writers.length) { writers(j)(); j += 1 }
       n += 1
+      pending = cursor.next()
     }
     batch.setNumRows(n)
     true
@@ -296,6 +290,7 @@ class RosbagMetaColumnarReader(p: RosbagInputPartition, required: StructType,
 class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
     msgDef: String, required: StructType, includeRaw: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter],
+    seqnos: Option[RosbagSeqno.Lookup] = None,
     batchSize: Int = 4096, batchBytes: Long = 32L << 20)
     extends PartitionReader[ColumnarBatch] {
   import RosbagColumnarRead._
@@ -314,24 +309,32 @@ class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
   // fields colliding with reserved names carry the `_field` suffix in
   // the typed schema (RosbagTypedRead.typedSchema) — look them up
   // under the renamed column
-  private val metaNames = Set("bag_path", "chunk_idx", "offset", "time_sec", "time_nsec",
-    "connection_id", "data")
-  private val reservedPayload = metaNames + "seqno"
+  private val metaNames = Set("seqno", "bag_path", "chunk_idx", "offset", "time_sec",
+    "time_nsec", "connection_id", "data")
   private val ops: Array[Op] =
     compile(bundle, bundle.root, prefix = "",
-      name => vec(if (reservedPayload(name)) name + "_field" else name)).toArray
+      name => vec(if (metaNames(name)) name + "_field" else name)).toArray
   // wire-walk needed at all? (meta-only scans skip the decode entirely)
   private val needsWalk: Boolean =
     required.fieldNames.exists(n => !metaNames(n))
 
   private lazy val typeConns = p.conns.filter(_._2.datatype == datatype).keySet
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    BagFormat.chunkMessages(p.chunk, data).iterator
-      .filter(m => typeConns.contains(m.connId))
-      .filter(m => filters.forall(f => RosbagFilters.eval(f, m, p.conns(m.connId), p.path)))
+  // pushed meta filters skip whole messages BEFORE the decode; the
+  // payload is decoded straight from the chunk body, never copied
+  private lazy val cursor = new ChunkCursor(p, filters, -1, typeConns.contains)
+  private lazy val chunkSeqnos = seqnos.map(_(p))
+  private var seqno = -1L
+
+  /** The next kept message with a seqno (when stamping seqnos). */
+  private def advance(): Boolean = {
+    while (cursor.next()) {
+      seqno = chunkSeqnos.fold(0L)(_(cursor.walk.offset))
+      if (seqno >= 0) return true
+    }
+    false
   }
 
+  private val seqnoV = vec("seqno").orNull
   private val bagPathV = vec("bag_path").orNull
   private val bagPathBytes = p.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   private val chunkIdxV = vec("chunk_idx").orNull
@@ -340,9 +343,10 @@ class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
   private val timeNsecV = vec("time_nsec").orNull
   private val connIdV = vec("connection_id").orNull
   private val rawV = if (includeRaw) vec("data").orNull else null
+  private var pending = false   // a kept message the last batch had no room for
 
   override def next(): Boolean = {
-    if (!messages.hasNext) return false
+    if (!pending && !advance()) return false
     var i = 0
     while (i < vectors.length) { vectors(i).reset(); i += 1 }
     var n = 0
@@ -354,24 +358,28 @@ class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
     // Meta-only scans materialize nothing from the payload, so they
     // keep full-size batches regardless of message size.
     val payloadMaterialized = needsWalk || rawV != null
-    while (n < batchSize && bytes < batchBytes && messages.hasNext) {
-      val m = messages.next()
-      if (payloadMaterialized) bytes += m.data.length
+    pending = true
+    while (pending && n < batchSize && bytes < batchBytes) {
+      val w = cursor.walk
+      if (payloadMaterialized) bytes += w.dataLen
+      if (seqnoV != null) seqnoV.appendLong(seqno)
       if (bagPathV != null) bagPathV.appendByteArray(bagPathBytes, 0, bagPathBytes.length)
       if (chunkIdxV != null) chunkIdxV.appendInt(p.chunkIdx)
-      if (offsetV != null) offsetV.appendInt(m.offsetInChunk)
-      if (timeSecV != null) timeSecV.appendInt(m.timeSec)
-      if (timeNsecV != null) timeNsecV.appendInt(m.timeNsec)
-      if (connIdV != null) connIdV.appendInt(m.connId)
-      if (rawV != null) rawV.appendByteArray(m.data, 0, m.data.length)
+      if (offsetV != null) offsetV.appendInt(w.offset)
+      if (timeSecV != null) timeSecV.appendInt(w.timeSec)
+      if (timeNsecV != null) timeNsecV.appendInt(w.timeNsec)
+      if (connIdV != null) connIdV.appendInt(w.conn)
+      if (rawV != null) rawV.appendByteArray(w.body, w.dataOff, w.dataLen)
       if (needsWalk) {
-        val buf = ByteBuffer.wrap(m.data).order(ByteOrder.LITTLE_ENDIAN)
+        val buf = ByteBuffer.wrap(w.body, w.dataOff, w.dataLen).slice()
+          .order(ByteOrder.LITTLE_ENDIAN)
         var j = 0
         while (j < ops.length) { ops(j)(buf); j += 1 }
         require(!buf.hasRemaining,
-          s"decode did not consume buffer: ${buf.remaining} bytes left of ${m.data.length}")
+          s"decode did not consume buffer: ${buf.remaining} bytes left of ${w.dataLen}")
       }
       n += 1
+      pending = advance()
     }
     batch.setNumRows(n)
     true

@@ -31,17 +31,24 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage: spark.read.format("rosbag").load(path). Connections are
   * exposed separately via `RosbagTables.connections(spark, path)`.
+  * Typed reads (`option("datatype", ...)`, [[RosbagTypedRead]]) take
+  * `option("seqnoFrom", dir)` to stamp each message's global seqno
+  * from a seqno table ([[RosbagSeqno]]), with `option("seqnoMissing",
+  * "drop")` to drop messages the table does not number.
   */
 class RosbagDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "rosbag"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = RosbagDataSource.pathSpec(options)
+    val seqno = RosbagDataSource.seqnoSpec(options)
     Option(options.get("datatype")) match {
       case Some(dt) =>
         val target = RosbagTypedRead.resolveTarget(path, dt, Option(options.get("md5")))
         RosbagTypedRead.typedSchema(MsgDefParser.parse(dt, target.msgDef),
-          options.getBoolean("includeRaw", false))
-      case None => RosbagDataSource.SpineSchema
+          options.getBoolean("includeRaw", false), seqno.isDefined)
+      case None =>
+        require(seqno.isEmpty, "seqnoFrom needs a typed read (option \"datatype\")")
+        RosbagDataSource.SpineSchema
     }
   }
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -53,7 +60,8 @@ class RosbagDataSource extends TableProvider with DataSourceRegister {
     new RosbagTable(RosbagDataSource.pathSpec(opts),
       Option(opts.get("datatype")),
       opts.getBoolean("includeRaw", false),
-      Option(opts.get("md5")))
+      Option(opts.get("md5")),
+      RosbagDataSource.seqnoSpec(opts))
   }
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -70,6 +78,18 @@ object RosbagDataSource {
     val bags = opts.get("bags")
     if (bags != null && bags.nonEmpty) bags else opts.get("path")
   }
+
+  /** A typed read's seqno source: `seqnoFrom` = the seqno table's dir,
+    * `seqnoMissing` = "error" (default: an unnumbered message fails the
+    * read) or "drop". Returns (dir, dropMissing).
+    */
+  def seqnoSpec(opts: CaseInsensitiveStringMap): Option[(String, Boolean)] =
+    Option(opts.get("seqnoFrom")).map { dir =>
+      val mode = opts.getOrDefault("seqnoMissing", "error")
+      require(mode == "error" || mode == "drop",
+        s"seqnoMissing must be 'error' or 'drop', got '$mode'")
+      (dir, mode == "drop")
+    }
 
   /** Build the newline-separated "bags" option value from resolved
     * paths. '\n' is the list separator, so a POSIX path containing a
@@ -149,15 +169,17 @@ object RosbagDataSource {
   /** CRC32 of a message payload — JDK zlib intrinsics, ~GB/s; cheap
     * next to chunk decompression and the wire walk.
     */
-  def crc32(b: Array[Byte]): Long = {
+  def crc32(b: Array[Byte]): Long = crc32(b, 0, b.length)
+  def crc32(b: Array[Byte], off: Int, len: Int): Long = {
     val c = new java.util.zip.CRC32()
-    c.update(b, 0, b.length)
+    c.update(b, off, len)
     c.getValue
   }
 }
 
 class RosbagTable(path: String, datatype: Option[String] = None,
-                  includeRaw: Boolean = false, md5: Option[String] = None)
+                  includeRaw: Boolean = false, md5: Option[String] = None,
+                  seqno: Option[(String, Boolean)] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   // typed reads resolve (datatype, md5 variant) -> one msg def + the
@@ -168,15 +190,18 @@ class RosbagTable(path: String, datatype: Option[String] = None,
   override def name(): String = s"rosbag:$path${datatype.map(":" + _).getOrElse("")}"
   override def schema(): StructType = target match {
     case Some(t) =>
-      RosbagTypedRead.typedSchema(MsgDefParser.parse(t.datatype, t.msgDef), includeRaw)
-    case None => RosbagDataSource.SpineSchema
+      RosbagTypedRead.typedSchema(MsgDefParser.parse(t.datatype, t.msgDef), includeRaw,
+        seqno.isDefined)
+    case None =>
+      require(seqno.isEmpty, "seqnoFrom needs a typed read (option \"datatype\")")
+      RosbagDataSource.SpineSchema
   }
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RosbagScanBuilder(path, schema(), target, includeRaw)
+    new RosbagScanBuilder(path, schema(), target, includeRaw, seqno)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -187,7 +212,8 @@ class RosbagTable(path: String, datatype: Option[String] = None,
 }
 
 class RosbagScanBuilder(path: String, fullSchema: StructType,
-    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false)
+    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false,
+    seqno: Option[(String, Boolean)] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit
     with SupportsPushDownAggregates {
@@ -286,7 +312,7 @@ class RosbagScanBuilder(path: String, fullSchema: StructType,
   override def build(): Scan = agg match {
     case Some((sch, rows)) =>
       new graft.ros.MetadataAggScan(sch, rows, s"rosbag $path")
-    case None => new RosbagScan(path, required, pushed, limit, typed, includeRaw)
+    case None => new RosbagScan(path, required, pushed, limit, typed, includeRaw, seqno)
   }
 }
 
@@ -366,13 +392,13 @@ object RosbagFilters {
   // `path` is REQUIRED (no default): a call site that forgot it would
   // silently evaluate pushed bag_path filters against "" and drop every
   // row — the compiler must catch the omission instead.
-  def eval(f: Filter, m: BagFormat.BagMessage, conn: BagFormat.BagConnection,
+  def eval(f: Filter, connId: Int, timeSec: Int, conn: BagFormat.BagConnection,
            path: String): Boolean = {
     def v(c: String): Any = c match {
-      case "connection_id" => m.connId
+      case "connection_id" => connId
       case "topic" => conn.topic
       case "datatype" => conn.datatype
-      case "time_sec" => m.timeSec
+      case "time_sec" => timeSec
       case "bag_path" => path
     }
     def cmp(a: Any, b: Any): Int = (a, b) match {
@@ -397,7 +423,8 @@ final case class RosbagInputPartition(path: String, chunkIdx: Int,
   extends InputPartition
 
 class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limit: Int,
-    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false)
+    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false,
+    seqno: Option[(String, Boolean)] = None)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -446,6 +473,7 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
     // a single existing FILE is tailed as one growing bag; a directory
     // or glob streams as a fleet-ingest archive — new bags AND new
     // chunks of known bags are picked up per trigger
+    require(seqno.isEmpty, "seqnoFrom is a batch-read option")
     val p = new Path(path)
     val isSingleFile = !path.contains('\n') &&
       !path.exists(c => "*?[]{}".indexOf(c.toInt) >= 0) && {
@@ -493,8 +521,14 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
     // chunk plans millions of partitions on a real fleet; pack
     // consecutive chunks to Spark's file-split budget (see
     // graft.ros.PartitionPacking); pruning above ran per chunk
-    graft.ros.PartitionPacking.packPartitions(perChunk)
+    val packed = graft.ros.PartitionPacking.packPartitions(perChunk)
+    seqno.fold(packed) { case (dir, drop) =>
+      RosbagSeqno.routeAll(dir, drop, seqnoFiles, packed) }
   }
+  // the seqno table's footers, read once per scan (runtime filtering
+  // re-plans partitions, never the table)
+  private lazy val seqnoFiles = seqno.fold(Seq.empty[RosbagSeqno.SeqnoFile])(s =>
+    RosbagSeqno.footers(s._1))
 
   override def createReaderFactory(): PartitionReaderFactory = typed match {
     case Some(t) => new RosbagTypedReaderFactory(t.datatype, t.msgDef, required, includeRaw, filters)
@@ -502,7 +536,8 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
   }
 
   override def description(): String =
-    s"rosbag $path${typed.map(t => s" typed=${t.datatype}").getOrElse("")}, " +
+    s"rosbag $path${typed.map(t => s" typed=${t.datatype}").getOrElse("")}" +
+      s"${seqno.map(s => s" seqnoFrom=${s._1}").getOrElse("")}, " +
       s"pushedFilters=[${filters.mkString(", ")}], limit=$limit"
 }
 
@@ -530,19 +565,44 @@ class RosbagReaderFactory(required: StructType, filters: Array[Filter], limit: I
     }
 }
 
+/** The messages one bag reader keeps from one chunk, in storage order:
+  * the shared [[BagFormat.ChunkWalk]] plus the checks every reader
+  * applies BEFORE touching a payload — `accept` on the connection id,
+  * then the pushed filters, then the row limit. The walk's current
+  * record is the kept message.
+  */
+private[bag] final class ChunkCursor(p: RosbagInputPartition, filters: Array[Filter],
+    limit: Int, accept: Int => Boolean) {
+  lazy val walk: BagFormat.ChunkWalk = RosbagIO.walkChunk(p.path, p.chunk)
+  private var kept = 0
+
+  def next(): Boolean = {
+    if (limit >= 0 && kept >= limit) return false
+    val w = walk
+    while (w.nextMessage()) {
+      if (accept(w.conn) && filters.forall(f =>
+          RosbagFilters.eval(f, w.conn, w.timeSec, p.conns(w.conn), p.path))) {
+        kept += 1
+        return true
+      }
+    }
+    false
+  }
+}
+
+private[bag] object ChunkCursor {
+  /** The spine readers' connection check: every message's connection
+    * must be in the bag's catalog.
+    */
+  def knownConn(p: RosbagInputPartition): Int => Boolean = id =>
+    p.conns.contains(id) ||
+      (throw new IllegalStateException(s"message references unknown connection $id"))
+}
+
 class RosbagPartitionReader(p: RosbagInputPartition, required: StructType,
     filters: Array[Filter], limit: Int) extends PartitionReader[InternalRow] {
 
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    val all = BagFormat.chunkMessages(p.chunk, data).iterator
-    val filtered = all.filter { m =>
-      val conn = p.conns.getOrElse(m.connId,
-        throw new IllegalStateException(s"message references unknown connection ${m.connId}"))
-      filters.forall(f => RosbagFilters.eval(f, m, conn, p.path))
-    }
-    if (limit >= 0) filtered.take(limit) else filtered
-  }
+  private val cursor = new ChunkCursor(p, filters, limit, ChunkCursor.knownConn(p))
   private var current: BagFormat.BagMessage = _
 
   // per-connection "first field is a Header" memo (startsWithHeader is
@@ -558,7 +618,11 @@ class RosbagPartitionReader(p: RosbagInputPartition, required: StructType,
     else null
 
   override def next(): Boolean =
-    if (messages.hasNext) { current = messages.next(); true } else false
+    if (cursor.next()) {
+      val w = cursor.walk
+      current = BagFormat.BagMessage(w.conn, w.timeSec, w.timeNsec, w.offset, w.data())
+      true
+    } else false
 
   // The projection compiles ONCE per reader into an extractor array —
   // no per-row per-field name dispatch, no Seq allocation. UTF8 topic/
@@ -675,14 +739,13 @@ object RosbagIO {
     }
   }
 
-  /** Scan many bag indexes concurrently (cache-aware): the per-bag
-    * index read is driver-side metadata I/O, and a 10k-bag corpus
-    * would otherwise pay it serially on every plan. blocking{} marks
-    * the I/O so the shared pool grows past core count instead of
-    * convoying behind it.
+  /** Scan many bag indexes concurrently (cache-aware) on the bounded
+    * [[graft.ros.DriverPool]]: the per-bag index read is driver-side
+    * metadata I/O, and a 10k-bag corpus would otherwise pay it serially
+    * on every plan.
     */
   def scanIndexes(paths: Seq[String]): Seq[(String, BagFormat.BagIndex)] =
-    scanIndexesImpl(paths, tolerant = false)
+    graft.ros.DriverPool.parMap(paths)(p => p -> scanIndex(p))
 
   /** scanIndexes that DROPS bags vanishing between listing and open
     * (fleet uploaders delete/rename mid-trigger) — for discovery paths
@@ -690,35 +753,9 @@ object RosbagIO {
     * isn't offered; committed replays stay strict.
     */
   def scanIndexesTolerant(paths: Seq[String]): Seq[(String, BagFormat.BagIndex)] =
-    scanIndexesImpl(paths, tolerant = true)
-
-  private def scanIndexesImpl(paths: Seq[String], tolerant: Boolean)
-      : Seq[(String, BagFormat.BagIndex)] = {
-    if (paths.isEmpty) return Seq.empty
-    // bounded pool, not Future.traverse on the global EC: blocking{}
-    // compensation threads scale with the FLEET size there (10k bags =
-    // thousands of threads each holding an open stream); 32 metadata
-    // readers saturate any filesystem's listing path
-    val par = math.min(32, paths.size)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    try {
-      val futs = paths.map { p =>
-        pool.submit(new java.util.concurrent.Callable[(String, BagFormat.BagIndex)] {
-          override def call(): (String, BagFormat.BagIndex) =
-            try p -> scanIndex(p)
-            catch { case _: java.io.FileNotFoundException if tolerant => null }
-        })
-      }
-      futs.map { f =>
-        // surface the ORIGINAL failure ("corrupt bag ...": the message
-        // callers and tests match on), not the pool's ExecutionException
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }.filter(_ != null)
-      // shutdownNow: on the failure path plain shutdown would drain
-      // the remaining queued scans after the caller already rethrew
-    } finally { pool.shutdownNow(); () }
-  }
+    graft.ros.DriverPool.parMap(paths) { p =>
+      try Some(p -> scanIndex(p)) catch { case _: java.io.FileNotFoundException => None }
+    }.flatten
 
   // Index cache: every Spark action re-plans the scan, and an uncached
   // scanIndex re-reads the WHOLE bag driver-side per action. ONE entry
@@ -736,6 +773,11 @@ object RosbagIO {
       else (version, BagFormat.scanIndex(() => filesystem.open(p)))
     )._2
   }
+
+  /** A walk over one chunk's decompressed records. */
+  def walkChunk(path: String, chunk: BagFormat.BagChunk): BagFormat.ChunkWalk =
+    new BagFormat.ChunkWalk(BagFormat.decompressChunk(chunk.compression,
+      readChunkData(path, chunk), chunk.uncompressedSize))
 
   def readChunkData(path: String, chunk: BagFormat.BagChunk): Array[Byte] = {
     val (filesystem, p) = fs(path)

@@ -19,7 +19,8 @@ import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
   * Schema: spine meta (chunk_idx, offset, time_sec, time_nsec,
   * connection_id) ++ flattened payload columns (reserved names get
   * `_field` like the ETL). The raw blob is included only when
-  * `option("includeRaw", "true")`.
+  * `option("includeRaw", "true")`. `option("seqnoFrom", dir)` prepends
+  * `seqno`, stamped from a seqno table in the reader ([[RosbagSeqno]]).
   */
 object RosbagTypedRead {
   val MetaFields: Seq[StructField] = Seq(
@@ -73,11 +74,18 @@ object RosbagTypedRead {
     MsgDefParser.parse(datatype, t.msgDef)
   }
 
-  def typedSchema(bundle: RosMsgBundle, includeRaw: Boolean): StructType = {
+  /** `seqno` is nullable: the per-type tables have always carried it
+    * from the staged seqno map, read back from parquet as nullable, and
+    * the stamped column keeps their parquet schema unchanged.
+    */
+  val SeqnoField: StructField = StructField("seqno", LongType, nullable = true)
+
+  def typedSchema(bundle: RosMsgBundle, includeRaw: Boolean,
+      withSeqno: Boolean = false): StructType = {
     val payload = RosSchemaMapper.flatSchema(bundle).fields.map(f =>
       if (reserved(f.name)) f.copy(name = f.name + "_field") else f)
     val raw = if (includeRaw) Seq(StructField("data", BinaryType, nullable = false)) else Nil
-    StructType(MetaFields ++ payload ++ raw)
+    StructType((if (withSeqno) Seq(SeqnoField) else Nil) ++ MetaFields ++ payload ++ raw)
   }
 
   /** Scala decode value → Catalyst internal value, per data type. */
@@ -97,14 +105,18 @@ class RosbagTypedReaderFactory(datatype: String, msgDef: String,
     required: StructType, includeRaw: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends PartitionReaderFactory {
+  // a seqno-routed partition loads its seqnos ONCE, for all its chunks
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.rows(p, createReader)
-      case p => new RosbagTypedPartitionReader(
-        p.asInstanceOf[RosbagInputPartition], datatype, msgDef, required,
-        includeRaw, filters)
-    }
+    rows(partition, None)
+  private def rows(partition: InputPartition, seqnos: Option[RosbagSeqno.Lookup])
+      : PartitionReader[InternalRow] = partition match {
+    case r: SeqnoRoutedPartition => rows(r.inner, Some(RosbagSeqno.load(r)))
+    case p: graft.ros.PackedPartition =>
+      graft.ros.ConcatPartitionReader.rows(p, rows(_, seqnos))
+    case p => new RosbagTypedPartitionReader(
+      p.asInstanceOf[RosbagInputPartition], datatype, msgDef, required,
+      includeRaw, filters, seqnos)
+  }
 
   // vectorized path: decode straight into column vectors whenever every
   // required column has a columnar-supported shape (scalars, strings,
@@ -115,60 +127,73 @@ class RosbagTypedReaderFactory(datatype: String, msgDef: String,
     RosbagColumnarRead.enabled && RosbagColumnarRead.supportsColumnar(required)
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.batches(p, createColumnarReader)
-      case p => new RosbagTypedColumnarReader(
-        p.asInstanceOf[RosbagInputPartition], datatype, msgDef, required,
-        includeRaw, filters)
-    }
+    batches(partition, None)
+  private def batches(partition: InputPartition, seqnos: Option[RosbagSeqno.Lookup])
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = partition match {
+    case r: SeqnoRoutedPartition => batches(r.inner, Some(RosbagSeqno.load(r)))
+    case p: graft.ros.PackedPartition =>
+      graft.ros.ConcatPartitionReader.batches(p, batches(_, seqnos))
+    case p => new RosbagTypedColumnarReader(
+      p.asInstanceOf[RosbagInputPartition], datatype, msgDef, required,
+      includeRaw, filters, seqnos)
+  }
 }
 
 class RosbagTypedPartitionReader(p: RosbagInputPartition, datatype: String,
     msgDef: String, required: StructType, includeRaw: Boolean,
-    filters: Array[org.apache.spark.sql.sources.Filter])
+    filters: Array[org.apache.spark.sql.sources.Filter],
+    seqnos: Option[RosbagSeqno.Lookup] = None)
     extends PartitionReader[InternalRow] {
   import RosbagTypedRead._
 
   private lazy val bundle = MsgDefParser.parse(datatype, msgDef)
-  private lazy val fullSchema = typedSchema(bundle, includeRaw)
+  private lazy val fullSchema = typedSchema(bundle, includeRaw, seqnos.isDefined)
   // index of each required column in the full typed row
   private lazy val projection: Array[Int] =
     required.fields.map(f => fullSchema.fieldIndex(f.name))
   private lazy val typeConns = p.conns.filter(_._2.datatype == datatype).keySet
+  // pushed meta filters skip whole messages BEFORE any payload copy
+  private lazy val cursor = new ChunkCursor(p, filters, -1, typeConns.contains)
+  private lazy val chunkSeqnos = seqnos.map(_(p))
+  private val metaStart = if (seqnos.isDefined) 1 else 0
 
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    BagFormat.chunkMessages(p.chunk, data).iterator
-      .filter(m => typeConns.contains(m.connId))
-      // pushed meta filters skip whole messages BEFORE the decode cost
-      .filter(m => filters.forall(f => RosbagFilters.eval(f, m, p.conns(m.connId), p.path)))
-  }
   private var current: BagFormat.BagMessage = _
+  private var seqno = -1L
   private val pathUtf8 = UTF8String.fromString(p.path)
 
-  override def next(): Boolean =
-    if (messages.hasNext) { current = messages.next(); true } else false
+  override def next(): Boolean = {
+    while (cursor.next()) {
+      val w = cursor.walk
+      seqno = chunkSeqnos.fold(0L)(_(w.offset))
+      if (seqno >= 0) {
+        current = BagFormat.BagMessage(w.conn, w.timeSec, w.timeNsec, w.offset, w.data())
+        return true
+      }
+    }
+    false
+  }
 
   // column pruning: decode the payload only when a payload column is
   // actually required (meta-only scans — counts, time filters — keep
   // the "no decode unless asked" property of the spine reader)
   private lazy val needsPayload: Boolean =
-    projection.exists(i => i >= MetaFields.size &&
+    projection.exists(i => i >= metaStart + MetaFields.size &&
       !(includeRaw && i == fullSchema.size - 1))
 
   override def get(): InternalRow = {
     val nFields = fullSchema.size
     val full = new Array[Any](nFields)
-    full(0) = pathUtf8
-    full(1) = p.chunkIdx; full(2) = current.offsetInChunk
-    full(3) = current.timeSec; full(4) = current.timeNsec; full(5) = current.connId
+    if (seqnos.isDefined) full(0) = seqno
+    full(metaStart) = pathUtf8
+    full(metaStart + 1) = p.chunkIdx; full(metaStart + 2) = current.offsetInChunk
+    full(metaStart + 3) = current.timeSec; full(metaStart + 4) = current.timeNsec
+    full(metaStart + 5) = current.connId
     if (includeRaw) full(nFields - 1) = current.data
     if (needsPayload) {
       val vals = RosSchemaMapper.decode(bundle, current.data)
       var i = 0
       val it = vals.iterator
-      while (it.hasNext) { full(MetaFields.size + i) = it.next(); i += 1 }
+      while (it.hasNext) { full(metaStart + MetaFields.size + i) = it.next(); i += 1 }
     }
     InternalRow.fromSeq(projection.toSeq.map { i =>
       toCatalyst(full(i), fullSchema.fields(i).dataType)

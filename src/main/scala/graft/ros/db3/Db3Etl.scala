@@ -81,7 +81,7 @@ object Db3Etl {
           append: Boolean = false): Info = {
     val stageDir = s"$out/_stage"
     val seqnoDir = s"$out/_seqno"
-    val (slice, plan) = EtlCore.convert(spark, out, files, "file_path", "Topics",
+    val (slice, plan) = EtlCore.convert(spark, out, files, "Topics",
         seqnoOffset, append, naming, Seq(seqnoDir, stageDir)) { _ =>
       // ONE metadata scan per file serves the dimension, the definition
       // census and the retention census alike — parallel across files

@@ -15,15 +15,20 @@ import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
   *
   * Scale shape: the bag scan parallelizes over packed chunk ranges;
   * seqno is the range-partition + prefix-sum operator (no
-  * single-partition stage; AQE right-sizes its partitions); each
-  * per-type table is a typed scan decoding only that type's rows (the
+  * single-partition stage; AQE right-sizes its partitions) over
+  * staged meta, and its one shuffle carries ints only. Each per-type
+  * table is a typed scan decoding only that type's rows (the
   * reference's route-by-type, FlattenedRosWriter.cpp:273-289, becomes
-  * predicate pushdown into the source), written with as many tasks as
-  * its own bytes need but never so few that a task walks more chunk
-  * bytes than one Spark file split. The write phase, incremental entry
-  * and crash repair are the containers' shared [[EtlCore]]: Messages
-  * writes concurrently with the per-type tables; Connections is
-  * driver-side tiny and lands last as the commit record.
+  * predicate pushdown into the source) that stamps each message's
+  * seqno from the staged `_seqno` map as it routes it (the reference
+  * numbers as it routes, FlattenedRosWriter.cpp:256): scan → project →
+  * coalesce → write, with no join, broadcast or shuffle at any scale,
+  * so payload blobs never cross a shuffle. Each is written with as
+  * many tasks as its own bytes need but never so few that a task walks
+  * more chunk bytes than one Spark file split. The write phase,
+  * incremental entry and crash repair are the containers' shared
+  * [[EtlCore]]: Messages writes concurrently with the per-type tables;
+  * Connections is driver-side tiny and lands last as the commit record.
   */
 object BagEtl {
   /** The reference's `info` result (rosbag2parquet.h:6-10) plus the
@@ -141,7 +146,7 @@ object BagEtl {
       "blobSideTable requires keepRawBlob=true (there is no blob column to externalize)")
     val stageDir = s"$out/_spine"
     val seqnoDir = s"$out/_seqno"
-    val (slice, _) = EtlCore.convert(spark, out, bags, "bag_path", "Connections",
+    val (slice, _) = EtlCore.convert(spark, out, bags, "Connections",
         seqnoOffset, append, naming, Seq(seqnoDir, stageDir)) { jobs =>
       val indexes = graft.ros.bag.RosbagIO.scanIndexes(bags)
       jobs.lap("scanIndex")
@@ -223,16 +228,18 @@ object BagEtl {
           EtlCore.ntzMicros("cast(time_sec as bigint) * 1000000 + time_nsec div 1000"))
       else messages0
 
-      // Seqno map: (chunk_idx, offset) -> seqno, ints only — the blobs
-      // never ride a seqno shuffle. Each per-type table is a TYPED
-      // source read (decode happens inside the PartitionReader as
-      // InternalRows — no Row/encoder boxing) joined to the seqno map on
-      // the stable storage identity. The reference's route-by-type
-      // dispatch (FlattenedRosWriter.cpp:273-289) is the datatype option
-      // pushed into the source.
-      val seqnoMap = EtlCore.stage(
-        spine.select(col("bag_path"), col("chunk_idx"), col("offset"), col("seqno")), seqnoDir)
-      jobs.lap("seqno-map-write")
+      // `_seqno` row groups of about a quarter of the messages one typed
+      // scan partition packs (from the chunk-info counts), so routing a
+      // partition reads little beyond its own rows
+      val rawBytes = indexes.map(_._2.chunks.map(_.uncompressedSize.toLong).sum).sum
+      val indexed = indexes.flatMap(_._2.chunks).flatMap(_.connCounts.getOrElse(Nil))
+        .map(_._2.toLong).sum
+      val groupRows = Some(indexed).filter(_ > 0).map { n =>
+        val (scanBudget, _) = graft.ros.PartitionPacking.budgetBytes(rawBytes)
+        math.max(1024L, (n.toDouble * scanBudget / math.max(1L, rawBytes) / 4).toLong)
+      }
+      val seqnoMap = stageSeqnoMap(spine, seqnoDir, groupRows)
+      jobs.lap("seqno-stage")
       val connBytes = Await.result(connBytesF, Duration.Inf)
       val (writeBudget, _) = graft.ros.PartitionPacking.budgetBytes(connBytes.values.sum)
       val maxSplitBytes = spark.sessionState.conf.filesMaxPartitionBytes
@@ -260,37 +267,33 @@ object BagEtl {
         val writeParts = math.max(1L, math.max(ceilDiv(typeBytes, writeBudget),
           ceilDiv(walked, maxSplitBytes))).min(Int.MaxValue.toLong).toInt
         EtlCore.TableWrite(s"per-type ${v.table}", () => {
-          // `joined`: the per-type frame. `rawForSide`: a lineage for the
+          // `frame`: the per-type frame. `rawForSide`: a lineage for the
           // side-table write that does NOT pay the payload decode. In scan
           // mode Catalyst pruning on the typed source gives that for free
           // (the side write prunes to seqno+data, skipping the wire walk);
           // in staged mode decodeRows goes through an RDD that is opaque
           // to pruning, so the side table reads the staged bytes directly.
-          val (joined, rawForSide) = if (stagedByType) {
+          val (frame, rawForSide) = if (stagedByType) {
             // decode this variant's bytes from its staging partition — the
             // bags themselves are never re-read. bag_path narrows to the
             // bags carrying THIS md5 variant (within a bag the md5 is
             // unique per datatype, so bag_path fully disambiguates).
             val part = stageRead
               .filter(col("datatype") === v.name && col("bag_path").isin(v.files: _*))
-              .join(seqnoMap, Seq("bag_path", "chunk_idx", "offset"))
+              .join(seqnoMap.drop("time_sec"), Seq("bag_path", "chunk_idx", "offset"))
               .select(col("seqno"), col("connection_id"), col("bag_path"), col("data"))
             val decoded = decodeRows(spark, part, MsgDefParser.parse(v.name, v.definition))
             (if (keepRawBlob) decoded else decoded.drop("data"), part)
           } else {
-            val typed = spark.read.format("rosbag")
-              .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(v.files))
-              .option("datatype", v.name).option("md5", v.md5)
-              .option("includeRaw", keepRawBlob.toString)
-              .load()
-            val j = EtlCore.typedFrame(typed, seqnoMap, Seq("bag_path", "chunk_idx", "offset"),
-              Set("bag_path", "chunk_idx", "offset", "time_sec", "time_nsec", "connection_id"),
-              Seq("connection_id", "bag_path"), keepRawBlob)
-            (j, j)
+            // a row-limited run numbers only its prefix: the messages
+            // outside it have no seqno and drop (the join's contract)
+            val t = typedTable(spark, v, seqnoDir, keepRawBlob,
+              dropUnnumbered = maxMessages.isDefined)
+            (t, t)
           }
           if (blobSideTable) {
-            val (slim, sideFromJoined) = graft.multimodal.MultimodalOps
-              .externalizeBlobs(joined, "data", "seqno", blobThreshold)
+            val (slim, sideFromFrame) = graft.multimodal.MultimodalOps
+              .externalizeBlobs(frame, "data", "seqno", blobThreshold)
             // scan mode: the returned side prunes to seqno+data through
             // the typed source (no payload decode). Staged mode: decode
             // is RDD-opaque to pruning, so build the side from the
@@ -299,15 +302,51 @@ object BagEtl {
               if (stagedByType) rawForSide
                 .filter(graft.multimodal.MultimodalOps.isBigBlob(col("data"), blobThreshold))
                 .select(col("seqno"), col("data"))
-              else sideFromJoined
+              else sideFromFrame
             EtlCore.writeTable(out, s"${v.table}_blobs", side.coalesce(writeParts), append) +
               EtlCore.writeTable(out, v.table, slim.coalesce(writeParts), append)
-          } else EtlCore.writeTable(out, v.table, joined.coalesce(writeParts), append)
-        })
+          } else EtlCore.writeTable(out, v.table, frame.coalesce(writeParts), append)
+        }, lap = s"per-type scan->write ${v.table}")
       }
       EtlCore.Plan(messages, connections, typeGroups, writes)
     }
     Info(bagName, slice.count, slice.sizeBytes, slice.crcXor)
+  }
+
+  /** Stage the seqno map `dir` (`_seqno`): one row per message, its
+    * storage identity (bag_path, chunk_idx, offset), `time_sec` and
+    * seqno — ints only, written in the spine's own time-range
+    * partitions with no new shuffle, in row groups of at most
+    * `groupRows` rows. This layout is the typed scan's `seqnoFrom`
+    * input contract ([[graft.ros.bag.RosbagSeqno]]): files sorted by
+    * (bag_path, chunk_idx, offset), so a scan partition's chunks route
+    * by the files' `time_sec` range and the row groups'
+    * bag_path/chunk_idx statistics.
+    */
+  private[etl] def stageSeqnoMap(spine: DataFrame, dir: String,
+      groupRows: Option[Long]): DataFrame =
+    EtlCore.stage(spine
+      .select(col("bag_path"), col("chunk_idx"), col("offset"), col("time_sec"), col("seqno"))
+      .sortWithinPartitions(col("bag_path"), col("chunk_idx"), col("offset")), dir,
+      options = groupRows.map(n => "parquet.block.row.count.limit" -> n.toString).toMap)
+
+  /** One per-type table of a default conversion: the variant's typed
+    * scan stamping seqnos from the staged map `seqnoDir`, projected to
+    * the per-type frame ([[EtlCore.typedColumns]]). A message the map
+    * does not number fails the write, or drops with `dropUnnumbered`.
+    */
+  private[etl] def typedTable(spark: SparkSession, v: EtlCore.Variant[String],
+      seqnoDir: String, keepRawBlob: Boolean, dropUnnumbered: Boolean): DataFrame = {
+    val typed = spark.read.format("rosbag")
+      .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(v.files))
+      .option("datatype", v.name).option("md5", v.md5)
+      .option("includeRaw", keepRawBlob.toString)
+      .option("seqnoFrom", seqnoDir)
+      .option("seqnoMissing", if (dropUnnumbered) "drop" else "error")
+      .load()
+    typed.select(EtlCore.typedColumns(typed,
+      Set("bag_path", "chunk_idx", "offset", "time_sec", "time_nsec", "connection_id"),
+      Seq("connection_id", "bag_path"), keepRawBlob): _*)
   }
 
   /** Per-table result of [[compact]]. `rewritten = false` means the

@@ -24,7 +24,8 @@ import graft.operators.Seqno
   *    the per-variant tables and RawMessages as concurrent jobs in one
   *    job group, cancelled AND awaited on failure; the dimension table
   *    (the increment's COMMIT RECORD) last; staging cleanup; DDL and
-  *    manifest; the Info aggregate; commit-record step 2;
+  *    manifest; the Info observed on the Messages write; commit-record
+  *    step 2;
   *  - the `_commit.json` protocol and the crash repair behind it.
   */
 object EtlCore {
@@ -94,9 +95,11 @@ object EtlCore {
     * already exists" (the commit-record contract depends on redo
     * working). The read-back passes the schema just written — without
     * it every read of a staging dir launches a footer-inference job.
+    * `options`: parquet writer settings (e.g. the row-group row limit).
     */
-  def stage(df: DataFrame, dir: String, partitionBy: Option[String] = None): DataFrame = {
-    val w = df.write.mode(SaveMode.Overwrite)
+  def stage(df: DataFrame, dir: String, partitionBy: Option[String] = None,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val w = df.write.mode(SaveMode.Overwrite).options(options)
     partitionBy.fold(w)(w.partitionBy(_)).option("compression", "snappy").parquet(dir)
     df.sparkSession.read.schema(df.schema).parquet(dir)
   }
@@ -128,16 +131,25 @@ object EtlCore {
     spark.createDataFrame(rows, outSchema)
   }
 
-  /** The per-variant frame from a container's typed-source scan — seqno
-    * + payload columns + `trailing` (+ the raw blob), the frame
-    * [[decodeRows]] emits — joined to the seqno map on the storage
-    * identity `keys`. `meta`: the scan's non-payload columns.
+  /** The per-variant frame's columns from a container's typed-source
+    * scan that carries `seqno`: seqno + payload columns + `trailing`
+    * (+ the raw blob) — the frame [[decodeRows]] emits. `meta`: the
+    * scan's non-payload columns.
+    */
+  def typedColumns(typed: DataFrame, meta: Set[String], trailing: Seq[String],
+      keepRawBlob: Boolean): Seq[Column] = {
+    val payload = typed.columns.toSeq.filterNot(c => meta(c) || c == "data" || c == "seqno")
+    val blob = if (keepRawBlob) Seq("data") else Nil
+    (("seqno" +: payload) ++ trailing ++ blob).map(col)
+  }
+
+  /** [[typedColumns]] of a typed-source scan joined to the seqno map on
+    * the storage identity `keys`.
     */
   def typedFrame(typed: DataFrame, seqnoMap: DataFrame, keys: Seq[String],
       meta: Set[String], trailing: Seq[String], keepRawBlob: Boolean): DataFrame = {
-    val payload = typed.columns.toSeq.filterNot(c => meta(c) || c == "data")
-    val blob = if (keepRawBlob) Seq("data") else Nil
-    typed.join(seqnoMap, keys).select((("seqno" +: payload) ++ trailing ++ blob).map(col): _*)
+    val joined = typed.join(seqnoMap, keys)
+    joined.select(typedColumns(joined, meta, trailing, keepRawBlob): _*)
   }
 
   /** Write one table of the run — Append in an increment, ErrorIfExists
@@ -155,9 +167,10 @@ object EtlCore {
       .option("compression", "snappy").parquet(path)
 
   /** One concurrent table job of the write phase: `desc` names its
-    * Spark jobs; `write` writes and returns the DDL it created.
+    * Spark jobs, `lap` its `GRAFT_ETL_TIMING` line (default `desc`);
+    * `write` writes and returns the DDL it created.
     */
-  final case class TableWrite(desc: String, write: () => String)
+  final case class TableWrite(desc: String, write: () => String, lap: String = "")
 
   /** What a container hands the write phase: the Messages spine, its
     * dimension table, the variants it named (for the manifest) and the
@@ -191,9 +204,10 @@ object EtlCore {
     }
 
     /** Run `body` as a job of this conversion's group, timed locally
-      * (under concurrency, lap() deltas would time the whole phase).
+      * (under concurrency, lap() deltas would time the whole phase) and
+      * reported as `label` (default `desc`).
       */
-    def async[T](desc: String)(body: => T): Future[T] = {
+    def async[T](desc: String, label: String = "")(body: => T): Future[T] = {
       val f = Future { scala.concurrent.blocking {   // blocking{}: Spark actions
         // park threads — without it the global EC caps concurrency at
         // CPU count and starves other users of the pool. Job groups are
@@ -202,7 +216,7 @@ object EtlCore {
         try {
           val t0 = System.nanoTime()
           val r = body
-          report(desc, t0)
+          report(if (label.isEmpty) desc else label, t0)
           r
         // pooled EC thread: clear the thread-local group so later Spark
         // work on this thread isn't attributed to a dead ETL group with
@@ -241,30 +255,34 @@ object EtlCore {
     *     unrecorded and the next increment purges and redoes it;
     *  1. the staging dirs drop (even on failure);
     *  1. the DDL script and the naming manifest;
-    *  1. Info from the WRITTEN Messages (columnar — not a container
-    *     re-scan; in append mode only THIS run's files), read by the
-    *     run's own schema: no footer-inference job, and older appended
-    *     files with a different column set still read;
+    *  1. Info observed on the Messages write itself (an
+    *     `Observation`: count, bytes, crc xor, max seqno of exactly
+    *     the rows this run wrote) — no read-back of the table;
     *  1. commit-record step 2: the dimension landed, so the increment
     *     is committed — finalize the record with the new max. (A crash
     *     before this resolves via inflight ⊆ done: repair recovers the
     *     max from the Messages footers.)
     * Returns THIS run's Info slice and the container's plan.
     */
-  def convert(spark: SparkSession, out: String, files: Seq[String], pathCol: String,
+  def convert(spark: SparkSession, out: String, files: Seq[String],
       dimension: String, seqnoOffset: Long, append: Boolean,
       naming: Map[(String, String), String], staging: Seq[String])
       (plan: Jobs => Plan): (Slice, Plan) = {
     writeCommitRecord(out, seqnoOffset - 1, files)
     val jobs = new Jobs(spark)
+    val info = org.apache.spark.sql.Observation()
     val (p, ddl) = try {
       val p = plan(jobs)
       val messagesWrite = jobs.async("Messages") {
-        write(p.messages, s"$out/Messages.parquet", append)
+        write(p.messages.observe(info,
+          count(lit(1)).as("count"),
+          coalesce(sum(col("size").cast("long")), lit(0L)).as("bytes"),
+          coalesce(expr("bit_xor(data_crc32)"), lit(0L)).as("crcXor"),
+          max(col("seqno")).as("maxSeqno")), s"$out/Messages.parquet", append)
       }
       // DDL is appended in the plan's (datatype-sorted) order for
       // deterministic output
-      val tableDdl = p.writes.map(w => jobs.async(w.desc)(w.write()))
+      val tableDdl = p.writes.map(w => jobs.async(w.desc, w.lap)(w.write()))
       implicit val ec: ExecutionContext = ExecutionContext.global
       val ddl = Await.result(messagesWrite.zip(Future.sequence(tableDdl)), Duration.Inf)
         ._2.mkString
@@ -282,17 +300,13 @@ object EtlCore {
     writeDdlFile(out, ddl, append)
     writeManifest(out, naming ++ p.variants.map(v => (v.name, v.md5) -> v.table))
 
-    val infoCols = StructType(Seq(pathCol, "seqno", "size", "data_crc32")
-      .map(p.messages.schema(_)))
-    val msgs0 = spark.read.schema(infoCols).parquet(s"$out/Messages.parquet")
-    val msgs = if (append) msgs0.filter(col(pathCol).isin(files: _*)) else msgs0
-    val r = msgs
-      .agg(count(lit(1)), coalesce(sum(col("size").cast("long")), lit(0L)),
-        coalesce(expr("bit_xor(data_crc32)"), lit(0L)), max(col("seqno"))).head()
-    writeCommitRecord(out,
-      if (r.isNullAt(3)) seqnoOffset - 1
-      else math.max(seqnoOffset - 1, r.getLong(3)), Nil)
-    (Slice(r.getLong(0), r.getLong(1), r.getLong(2)), p)
+    val r = info.get
+    writeCommitRecord(out, r("maxSeqno") match {
+      case null => seqnoOffset - 1
+      case m: Long => math.max(seqnoOffset - 1, m)
+    }, Nil)
+    (Slice(r("count").asInstanceOf[Long], r("bytes").asInstanceOf[Long],
+      r("crcXor").asInstanceOf[Long]), p)
   }
 
   /** Per-variant row counts of THIS run's slice (in append mode, the

@@ -123,7 +123,7 @@ object McapEtl {
           append: Boolean = false): Info = {
     val stageDir = s"$out/_spine"
     val seqnoDir = s"$out/_seqno"
-    val (slice, plan) = EtlCore.convert(spark, out, files, "file_path", "Channels",
+    val (slice, plan) = EtlCore.convert(spark, out, files, "Channels",
         seqnoOffset, append, naming, Seq(seqnoDir, stageDir)) { _ =>
       val channels = McapTables.channels(spark, McapDataSource.filesSpec(files))
 

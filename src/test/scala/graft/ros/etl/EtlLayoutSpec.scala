@@ -118,4 +118,40 @@ class EtlLayoutSpec extends SparkTestBase {
       assert(t.select("seqno").distinct().count() === t.count(), s"$table seqno unique")
     }
   }
+
+  private def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  test("a conversion runs no seqno join job per per-type table and no Info read-back") {
+    assert(etlInfo.count === nMessages)   // not the JVM's first conversion
+    val jobs = countJobs {
+      BagEtl.run(spark, bag, Files.createTempDirectory("graft_layout_jobs").toString + "/out")
+    }
+    // 16 with a broadcast-joined seqno map per table and a Messages
+    // read-back for Info
+    assert(jobs === 16 - types.size - 2)
+  }
+
+  test("maxMessages: per-type seqnos are a subset of Messages' with the join's counts") {
+    for ((n, expected) <- Seq(100L -> Seq(33L, 65L, 2L), 250L -> Seq(82L, 163L, 5L))) {
+      val o = Files.createTempDirectory("graft_layout_max").toString + "/out"
+      assert(BagEtl.run(spark, bag, o, maxMessages = Some(n)).count === n)
+      val messages = spark.read.parquet(s"$o/Messages.parquet").select("seqno")
+      val perType = types.map { case (_, t) => spark.read.parquet(s"$o/$t.parquet").select("seqno") }
+      assert(perType.map(_.count()) === expected, s"maxMessages $n")
+      assert(perType.reduce(_ union _).exceptAll(messages).isEmpty, s"maxMessages $n")
+    }
+  }
 }
